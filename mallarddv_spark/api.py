@@ -36,9 +36,6 @@ class MallardSparkVault:
         dm_db: str = "dm",
         metadata_db: str = "metadata",
         hash_algo: str = "sha1",
-        materialize_current: bool = False,
-        dv_buckets: int | None = None,
-        parallel_stages: bool = False,
     ):
         self.spark = spark
         self.scripts_path = scripts_path
@@ -48,17 +45,12 @@ class MallardSparkVault:
         self.dm_db = dm_db
         self.metadata_db = metadata_db
         self.hash_algo = hash_algo
-        #: when set, DV tables are created CLUSTERED BY their hash key into
-        #: this many buckets — loads then read pre-partitioned data
-        self.dv_buckets = dv_buckets
         #: driver-side control-table snapshot shared by init + every flow
         #: (invalidated whenever metadata CSVs are (re)loaded here)
         self._meta = MetadataCache(spark, metadata_db)
         self._executor = FlowExecutor(
             spark, stg_db, dv_db, bv_db, metadata_db, hash_algo,
-            materialize_current=materialize_current,
             metadata=self._meta,
-            parallel_stages=parallel_stages,
         )
 
     # -- context manager (reference ``mallarddv.py:64-85``) -----------------
@@ -90,13 +82,7 @@ class MallardSparkVault:
             (self.stg_db, self.dv_db, self.bv_db, self.dm_db, self.metadata_db),
         )
         catalog.ensure_metadata_tables(self.spark, self.metadata_db)
-        catalog.load_metadata_csvs(
-            self.spark, self.metadata_db, tables_csv, transitions_csv
-        )
-        self._meta.invalidate()
-        # the catalog may be (re)built after a metadata reload — the
-        # hash-view DDL memo must not suppress re-creation against it
-        self._executor.hashview_issued.clear()
+        self.overwrite_metadata_from_files(tables_csv, transitions_csv)
         if meta_only:
             return errors
 
@@ -115,16 +101,13 @@ class MallardSparkVault:
                         self.spark, self.stg_db, cols,
                     ),
                     pool.submit(
-                        hub.create_hub_tables,
-                        self.spark, self.dv_db, cols, self.dv_buckets,
+                        hub.create_hub_tables, self.spark, self.dv_db, cols,
                     ),
                     pool.submit(
-                        link.create_link_tables,
-                        self.spark, self.dv_db, cols, self.dv_buckets,
+                        link.create_link_tables, self.spark, self.dv_db, cols,
                     ),
                     pool.submit(
-                        satellite.create_sat_tables,
-                        self.spark, self.dv_db, cols, self.dv_buckets,
+                        satellite.create_sat_tables, self.spark, self.dv_db, cols,
                     ),
                 ]
                 # collect every group's failure, not just the first
@@ -270,11 +253,11 @@ class MallardSparkVault:
         bm25_index_paths: list[str] | None = None,
     ) -> dict[str, int]:
         """Roll back every torn (killed-mid-flow) run: DV rows whose run_id
-        never reached the ledger are removed and affected ``_current``
-        snapshots rebuilt. The reference needed no equivalent — DuckDB gave
-        it transactions (``db/database_connection.py:36-68``); on a parquet
-        catalog this compensation pass is the stand-in (on Delta/Iceberg it
-        becomes one ``DELETE`` per table). Returns {table: rows_removed},
+        never reached the ledger are removed. The reference needed no
+        equivalent — DuckDB gave it transactions
+        (``db/database_connection.py:36-68``); on a parquet catalog this
+        compensation pass is the stand-in (on Delta/Iceberg it becomes one
+        ``DELETE`` per table). Returns {table: rows_removed},
         plus ``"<table> (compaction)": <action>`` entries for any
         compaction that was interrupted mid-swap and healed first (healing
         runs before rollback so a restored table participates in it).

@@ -53,9 +53,7 @@ class FlowExecutor:
         bv_db: str = "bv",
         metadata_db: str = "metadata",
         hash_algo: str = "sha1",
-        materialize_current: bool = False,
         metadata: MetadataCache | None = None,
-        parallel_stages: bool = False,
     ):
         self.spark = spark
         self.stg_db = stg_db
@@ -63,24 +61,9 @@ class FlowExecutor:
         self.bv_db = bv_db
         self.metadata_db = metadata_db
         self.hash_algo = hash_algo
-        #: scale mode: satellite change detection probes (and maintains)
-        #: the incremental dv.{sat}_current table instead of windowing the
-        #: full history every load
-        self.materialize_current = materialize_current
         #: control-table snapshot, shared with the owning facade so
         #: init_vault + N flows pay for the metadata collects once
         self.metadata = metadata or MetadataCache(spark, metadata_db)
-        #: opt-in divergence from the reference's hubs → links → sats
-        #: ordering: the three entity-load stages are data-independent
-        #: (each reads only the staging hash view and writes only its own
-        #: target tables), so a bulk load can run them as concurrent job
-        #: groups — wall-clock ≈ the slowest stage instead of the sum.
-        #: Error semantics weaken from short-circuit to collect-all (every
-        #: stage attempts; all failures are reported); crash/failure
-        #: recovery is unchanged because ``recover()`` deletes a torn
-        #: run's rows by run_id across ALL DV tables regardless of which
-        #: subset committed. Default False = exact reference contract.
-        self.parallel_stages = parallel_stages
         #: hash-view DDL memo (db.table → issued view SQL): repeat flows
         #: with unchanged metadata skip the CREATE OR REPLACE round-trip.
         #: Discarded by the facade on init_vault (catalog may be rebuilt).
@@ -365,83 +348,21 @@ class FlowExecutor:
         # cache. At 100 TB the same holds structurally: the staging scan
         # is columnar and pruned per consumer, while caching the full-width
         # view would not fit cluster memory at all.
-        def _sats(*args):
-            return satellite.load_sats(
-                *args, use_current_table=self.materialize_current
-            )
-
-        stages = (
-            ("load_hubs", hub.load_hubs),
-            ("load_links", link.load_links),
-            ("load_sats", _sats),
-        )
         stage_args = (
             spark, self.stg_db, self.dv_db, source_table, transitions,
             run_id, record_source, load_dts,
         )
-        if self.parallel_stages:
-            from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-
-            # Each stage runs under its own Spark job group so a failing
-            # sibling can interrupt it: on first failure the still-running
-            # stages' active jobs are cancelled (interruptOnCancel), which
-            # aborts their uncommitted writes — tightening the
-            # partial-commit window the collect-all semantics otherwise
-            # leave open (driver-side code between jobs is not
-            # interrupted; recover() remains the full cleanup). Job groups
-            # are thread-local under pinned-thread mode, so the tag only
-            # covers this stage's jobs.
-            gid_prefix = f"flow_{source_table}_r{run_id}"
-
-            def _grouped(name, fn):
-                spark.sparkContext.setJobGroup(
-                    f"{gid_prefix}_{name}",
-                    f"{source_table}:{name}",
-                    interruptOnCancel=True,
-                )
-                return fn(*stage_args)
-
-            with ThreadPoolExecutor(max_workers=len(stages)) as pool:
-                futures = [
-                    (name, pool.submit(_grouped, name, fn)) for name, fn in stages
-                ]
-                wait([f for _, f in futures], return_when=FIRST_EXCEPTION)
-                failed = any(
-                    f.done() and not f.cancelled() and f.exception() is not None
-                    for _, f in futures
-                )
-                interrupted: set[str] = set()
-                if failed:
-                    for name, f in futures:
-                        if not f.done():
-                            spark.sparkContext.cancelJobGroup(
-                                f"{gid_prefix}_{name}"
-                            )
-                            interrupted.add(name)
-                for stage_name, fut in futures:
-                    try:
-                        fut.result()
-                    except Exception as ex:
-                        if stage_name in interrupted:
-                            # interruption fallout, not a root cause: log it,
-                            # report only genuine stage failures
-                            log.warning(
-                                "stage %s interrupted after sibling failure: %s",
-                                stage_name, ex,
-                            )
-                        else:
-                            errors.append((stage_name, str(ex)))
-            if errors:
+        for stage_name, fn in (
+            ("load_hubs", hub.load_hubs),
+            ("load_links", link.load_links),
+            ("load_sats", satellite.load_sats),
+        ):
+            try:
+                fn(*stage_args)
+            except Exception as ex:
+                errors.append((stage_name, str(ex)))
                 self._end(source_table, run_id, file_path, errors)
                 return errors
-        else:
-            for stage_name, fn in stages:
-                try:
-                    fn(*stage_args)
-                except Exception as ex:
-                    errors.append((stage_name, str(ex)))
-                    self._end(source_table, run_id, file_path, errors)
-                    return errors
 
         self._end(source_table, run_id, file_path, errors)
         return errors

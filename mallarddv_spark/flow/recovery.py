@@ -26,8 +26,7 @@ rename. The drop/rename pair is two catalog operations (the one
 non-atomic seam left on a plain parquet catalog — a crash in between
 leaves the data safe in the ``__rb`` table but the public name missing
 until recovery re-runs). On Delta/Iceberg this whole module collapses to
-``DELETE FROM t WHERE run_id IN (...)`` — one ACID statement per table —
-and the staging swap in ``_publish_current`` to ``REPLACE TABLE``.
+``DELETE FROM t WHERE run_id IN (...)`` — one ACID statement per table.
 
 Recovery is an explicit administrative action (``vault.recover()``), not
 an automatic side effect: a flow that *failed* with an error list also
@@ -53,11 +52,10 @@ _DV_PREFIXES = ("hub_", "link_", "nhl_", "hsat_", "lsat_")
 
 
 def list_dv_tables(spark: SparkSession, dv_db: str) -> list[str]:
-    """Hub/link/satellite tables in ``dv_db`` (excluding ``_current``
-    snapshot tables/views, which are derived state)."""
+    """Hub/link/satellite tables in ``dv_db`` (views are derived state)."""
     out = []
     for t in spark.catalog.listTables(dv_db):
-        if t.tableType == "VIEW" or "_current" in t.name:
+        if t.tableType == "VIEW":
             continue
         if t.name.startswith(_DV_PREFIXES):
             out.append(t.name)
@@ -97,22 +95,19 @@ def rollback_runs(
     metadata_db: str,
     dv_db: str,
     run_ids: list[int],
-    refresh_current: bool = True,
 ) -> dict[str, int]:
     """Remove all rows belonging to ``run_ids`` from every DV table and
     record a 'rollback' ledger row per run.
 
     Per-table protocol: write surviving rows to ``{t}__rb`` → drop ``t`` →
     rename ``{t}__rb`` to ``t``. The full rewrite only happens for tables
-    that actually contain orphan rows. Materialized ``_current`` snapshots
-    of affected satellites are rebuilt from the cleaned history.
+    that actually contain orphan rows.
 
     Returns {table: rows_removed}.
     """
     if not run_ids:
         return {}
     removed: dict[str, int] = {}
-    affected_sats: list[str] = []
     for t in list_dv_tables(spark, dv_db):
         fqn = f"{dv_db}.{quote_ident(t)}"
         df = spark.table(fqn)
@@ -127,17 +122,6 @@ def rollback_runs(
         spark.sql(f"ALTER TABLE {rb} RENAME TO {fqn}")
         removed[t] = n_bad
         log.warning("rolled back %d rows from %s", n_bad, fqn)
-        if t.startswith(("hsat_", "lsat_")):
-            affected_sats.append(t)
-
-    if refresh_current:
-        from mallarddv_spark.operators.satellite import refresh_current_table
-
-        for sat in affected_sats:
-            cur = f"{dv_db}.{quote_ident(sat + '_current')}"
-            if spark.catalog.tableExists(cur):
-                hk_col = spark.table(f"{dv_db}.{quote_ident(sat)}").columns[0]
-                refresh_current_table(spark, dv_db, sat, hk_col)
 
     now = datetime.now()
     runinfo.write_ledger_rows(

@@ -21,23 +21,8 @@ from mallarddv_spark.plans.types import spark_type_for
 HUB_AUDIT = "load_dts timestamp, record_source string, run_id int"
 
 
-def bucket_clause(hk_col: str, buckets: int | None) -> str:
-    """``CLUSTERED BY (hk) INTO n BUCKETS`` when bucketing is enabled.
-
-    DV join/window keys are uniform cryptographic hashes, so bucketing the
-    table on its hash key co-locates every downstream anti-join and window
-    with zero skew — the big-side shuffle disappears (plan-verified in
-    ``tests/test_layout.py`` / ``tests/test_bucketed_vault.py``)."""
-    if not buckets:
-        return ""
-    from mallarddv_spark.functions.hashing import quote_ident as _q
-
-    return f" CLUSTERED BY ({_q(hk_col)}) INTO {buckets} BUCKETS"
-
-
 def create_hub_tables(
-    spark: SparkSession, dv_db: str, table_columns: list[TableColumn],
-    buckets: int | None = None,
+    spark: SparkSession, dv_db: str, table_columns: list[TableColumn]
 ) -> list[str]:
     """CREATE TABLE IF NOT EXISTS ``dv.hub_{base}`` from ``rel_type='hub'``
     metadata. Business-key columns are suffixed ``_bk`` (single) or ``_cbk``
@@ -54,7 +39,6 @@ def create_hub_tables(
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {dv_db}.{quote_ident('hub_' + base)} "
             f"({quote_ident(base + '_hk')} string, {HUB_AUDIT}, {bks}) USING parquet"
-            f"{bucket_clause(base + '_hk', buckets)}"
         )
         created.append(f"hub_{base}")
     return created

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from mallarddv_spark.functions.hashing import quote_ident
-from mallarddv_spark.operators.hub import HUB_AUDIT, bucket_clause
+from mallarddv_spark.operators.hub import HUB_AUDIT
 from mallarddv_spark.plans.model import TableColumn, TransitionRecord, group_records
 from mallarddv_spark.plans.types import spark_type_for
 
@@ -25,8 +25,7 @@ def _link_hk_name(link_name: str) -> str:
 
 
 def create_link_tables(
-    spark: SparkSession, dv_db: str, table_columns: list[TableColumn],
-    buckets: int | None = None,
+    spark: SparkSession, dv_db: str, table_columns: list[TableColumn]
 ) -> list[str]:
     """CREATE ``dv.link_{base}`` / ``dv.nhl_{base}`` from metadata
     (``rel_type`` ∈ {link, nhl}): hash key, audit columns, leg ``_hk``
@@ -51,7 +50,6 @@ def create_link_tables(
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {dv_db}.{quote_ident(name)} "
             f"({quote_ident(base + '_hk')} string, {HUB_AUDIT}, {col_sql}) USING parquet"
-            f"{bucket_clause(base + '_hk', buckets)}"
         )
         created.append(name)
     return created

@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from mallarddv_spark.functions.hashing import quote_ident
-from mallarddv_spark.operators.hub import bucket_clause
 from mallarddv_spark.plans.model import TableColumn, TransitionRecord, group_records
 from mallarddv_spark.plans.types import spark_type_for
 from mallarddv_spark.exceptions import DVEntityError
@@ -53,12 +52,9 @@ def _sat_parts(cols: list[TableColumn]) -> tuple[str, list[TableColumn]]:
 
 
 def create_sat_tables(
-    spark: SparkSession, dv_db: str, table_columns: list[TableColumn],
-    buckets: int | None = None,
+    spark: SparkSession, dv_db: str, table_columns: list[TableColumn]
 ) -> list[str]:
-    """CREATE ``dv.hsat_{base}`` / ``dv.lsat_{base}`` (optionally bucketed
-    by parent hash key — both the change-detection window and the join
-    probe then read pre-partitioned data)."""
+    """CREATE ``dv.hsat_{base}`` / ``dv.lsat_{base}``."""
     rows = [c for c in table_columns if c.rel_type in ("hsat", "lsat")]
     created = []
     for key, cols in group_records(rows, ["rel_type", "base_name"]).items():
@@ -73,7 +69,7 @@ def create_sat_tables(
             f"CREATE TABLE IF NOT EXISTS {dv_db}.{quote_ident(name)} ("
             f"{quote_ident(hk_name)} string, load_dts timestamp, del_flag boolean, "
             f"hash_diff string, record_source string, run_id int{payload_sql}"
-            f") USING parquet{bucket_clause(hk_name, buckets)}"
+            f") USING parquet"
         )
         created.append(name)
     return created
@@ -140,19 +136,12 @@ def load_sats(
     run_id: int,
     record_source: str,
     load_dts: str,
-    use_current_table: bool = False,
 ) -> list[str]:
     """Run every ``sat_delta`` / ``sat_full`` transition for ``stg_table``.
 
     Mirrors ``satellite_manager.load_related_sats``: for each sat transition,
     insert changed/new versions; for ``sat_full`` additionally insert
     tombstones for keys that disappeared from the staging snapshot.
-
-    ``use_current_table``: the scale path. Change detection probes the
-    incrementally maintained ``dv.{sat}_current`` table (one row per key)
-    instead of windowing the full history every load, and folds the batch
-    back into it afterwards. History windows grow with total versions;
-    the current table grows only with distinct keys.
     """
     sat_loads = [r for r in transitions if r.transfer_type in ("sat_delta", "sat_full")]
     loaded = []
@@ -185,13 +174,7 @@ def load_sats(
             *[F.col(f.source_field).alias(f.target_field) for f in fields],
         ).distinct()
 
-        cur_table = f"{dv_db}.{quote_ident(sat_name + '_current')}"
-        if use_current_table:
-            if not spark.catalog.tableExists(cur_table):
-                refresh_current_table(spark, dv_db, sat_name, sat_hk)
-            latest = spark.table(cur_table)
-        else:
-            latest = _latest_set(spark.table(sat_table), sat_hk)
+        latest = _latest_set(spark.table(sat_table), sat_hk)
 
         # --- new/changed versions ---
         # Skip an incoming row iff SOME latest (max-load_dts) stored version
@@ -208,19 +191,16 @@ def load_sats(
         new_rows = incoming.join(
             blockers, on=[sat_hk, "hash_diff"], how="left_anti"
         )
-        batch = _append_aligned(new_rows, table_schema, sat_table)
+        _append_aligned(new_rows, table_schema, sat_table)
 
         # --- tombstones for sat_full ---
         if sat.transfer_type == "sat_full":
             # exactly one tombstone per disappeared key: use the single
             # latest version (deterministic run_id tiebreak), not the tied
             # set used for change detection
-            latest_one = (
-                latest
-                if use_current_table
-                else _latest_versions(spark.table(sat_table), sat_hk)
-            )
-            latest_alive = latest_one.filter(~F.col("del_flag"))
+            latest_alive = _latest_versions(
+                spark.table(sat_table), sat_hk
+            ).filter(~F.col("del_flag"))
             present = src.select(F.col(sat.source_field).alias(sat_hk)).distinct()
             gone = latest_alive.join(present, on=sat_hk, how="left_anti")
             tomb = gone.select(
@@ -232,21 +212,16 @@ def load_sats(
                 F.lit(run_id).cast("int").alias("run_id"),
                 *[F.col(f.target_field) for f in fields],
             ).distinct()
-            tomb_batch = _append_aligned(tomb, table_schema, sat_table)
-            batch = batch.unionByName(tomb_batch)
-
-        if use_current_table:
-            upsert_current_table(spark, dv_db, sat_name, sat_hk, batch)
+            _append_aligned(tomb, table_schema, sat_table)
 
         loaded.append(f"{sat_name}:{group}")
     return loaded
 
 
-def _append_aligned(df: DataFrame, table_schema, table_fqn: str) -> DataFrame:
+def _append_aligned(df: DataFrame, table_schema, table_fqn: str) -> None:
     """Append ``df`` to the table, aligning by name to the table's column
     order and NULL-filling declared columns the transitions don't feed
-    (reference behavior: such columns exist and stay NULL). Returns the
-    aligned batch (full table schema) for downstream current-table folds."""
+    (reference behavior: such columns exist and stay NULL)."""
     have = {c.lower() for c in df.columns}
     out = df.select(
         *[
@@ -257,100 +232,3 @@ def _append_aligned(df: DataFrame, table_schema, table_fqn: str) -> DataFrame:
         ]
     )
     out.write.mode("append").insertInto(table_fqn)
-    return out
-
-
-def _current_versions(spark: SparkSession, dv_db: str, sat_name: str) -> list[int]:
-    """Existing version numbers of ``{sat}_current`` backing tables."""
-    prefix = f"{sat_name}_current__v"
-    out = []
-    for t in spark.catalog.listTables(dv_db):
-        if t.name.startswith(prefix):
-            try:
-                out.append(int(t.name[len(prefix):]))
-            except ValueError:
-                pass
-    return sorted(out)
-
-
-def _publish_current(
-    spark: SparkSession, dv_db: str, sat_name: str, latest: DataFrame
-) -> str:
-    """Atomically publish a new snapshot of ``dv.{sat}_current``.
-
-    Version-and-swap protocol (the parquet-catalog stand-in for a Delta
-    ``MERGE``/Iceberg ``REPLACE``, which this becomes 1:1 on a lakehouse
-    deployment — reference got atomicity free from DuckDB transactions,
-    ``db/database_connection.py:36-68``):
-
-    1. write the full snapshot to a NEW table ``{sat}_current__v{N+1}``
-       (no reader references it yet — a crash here leaves unreferenced
-       files only, never a torn published table);
-    2. repoint the public VIEW ``dv.{sat}_current`` with one
-       ``CREATE OR REPLACE VIEW`` — a single catalog operation, so readers
-       see the old snapshot or the new one, never a missing/partial table;
-    3. drop superseded version tables (best-effort; leftovers are garbage,
-       not corruption).
-    """
-    cur = f"{dv_db}.{quote_ident(sat_name + '_current')}"
-    old = _current_versions(spark, dv_db, sat_name)
-    next_v = (old[-1] + 1) if old else 1
-    vt = f"{dv_db}.{quote_ident(f'{sat_name}_current__v{next_v}')}"
-    latest.write.mode("errorifexists").saveAsTable(vt)
-    # one-time migration: a pre-protocol deployment stored the snapshot as
-    # a plain TABLE under the public name; it must be dropped before the
-    # name can become a view
-    for t in spark.catalog.listTables(dv_db):
-        if t.name == f"{sat_name}_current" and t.tableType != "VIEW":
-            spark.sql(f"DROP TABLE {cur}")
-            break
-    spark.sql(f"CREATE OR REPLACE VIEW {cur} AS SELECT * FROM {vt}")
-    for v in old:
-        try:
-            spark.sql(
-                f"DROP TABLE IF EXISTS "
-                f"{dv_db}.{quote_ident(f'{sat_name}_current__v{v}')}"
-            )
-        except Exception:
-            pass
-    return cur
-
-
-def refresh_current_table(
-    spark: SparkSession, dv_db: str, sat_name: str, hk_col: str
-) -> str:
-    """Materialize ``dv.{sat}_current`` — one row per key, the latest
-    version — from the full history.
-
-    The logical ``bv.*_cv`` view recomputes its window at query time; marts
-    that hit current state repeatedly should pay that window once per load
-    instead. This full refresh is the bootstrap (and the post-recovery
-    rebuild); see :func:`upsert_current_table` for the per-batch
-    incremental path. Published via the atomic version-and-swap protocol
-    (:func:`_publish_current`).
-    """
-    latest = _latest_versions(spark.table(f"{dv_db}.{quote_ident(sat_name)}"), hk_col)
-    return _publish_current(spark, dv_db, sat_name, latest)
-
-
-def upsert_current_table(
-    spark: SparkSession, dv_db: str, sat_name: str, hk_col: str, batch: DataFrame
-) -> str:
-    """Incrementally fold a just-appended batch into ``dv.{sat}_current``:
-    union(current, batch) → latest per key → publish new snapshot.
-
-    Cost scales with |current| + |batch| (one shuffle on the hash key),
-    not with the full history. The new snapshot is written to a fresh
-    versioned table while reading the old one (no self-read, no lineage
-    checkpoint) and swapped in with one view replacement — readers never
-    observe a missing or half-written current table. On Delta this whole
-    function is a single ``MERGE``.
-    """
-    cur = f"{dv_db}.{quote_ident(sat_name + '_current')}"
-    if not spark.catalog.tableExists(cur):
-        return refresh_current_table(spark, dv_db, sat_name, hk_col)
-    current = spark.table(cur)
-    merged = _latest_versions(
-        current.unionByName(batch.select(current.columns)), hk_col
-    )
-    return _publish_current(spark, dv_db, sat_name, merged)

@@ -2012,14 +2012,10 @@ def q_dv_flow_e2e(spark, sf):
     with open(transitions_csv, "w") as fh:
         fh.write(_FLOW_TRANSITIONS)
 
-    # parallel entity stages: row-for-row equivalence with the sequential
-    # reference contract is fuzz-proven (test_fuzz_differential) and
-    # state-proven (test_parallel_stages); the sequential default remains
-    # covered by the integration/lifecycle suites
     # sha256 mode: the third supported hash algo, gate-exercised end-to-end
     # through the full flow lifecycle (sha1 is golden-pytest-pinned, md5
     # runs in every other dv_* gate query)
-    vault = MallardSparkVault(spark, hash_algo="sha256", parallel_stages=True, **dbs)
+    vault = MallardSparkVault(spark, hash_algo="sha256", **dbs)
     errors = vault.init_vault(tables_csv, transitions_csv)
     assert errors == [], errors
     errors = vault.execute_flow(
@@ -3105,10 +3101,7 @@ def q_dv_flow_lineitem(spark, sf):
     with open(transitions_csv, "w") as fh:
         fh.write(_LI_TRANSITIONS)
 
-    # bulk fact-table load: the three entity stages are data-independent,
-    # so run them as concurrent job groups (wall-clock ≈ slowest stage,
-    # not the sum — the shape a real 100 TB backfill would use)
-    vault = MallardSparkVault(spark, hash_algo="md5", parallel_stages=True, **dbs)
+    vault = MallardSparkVault(spark, hash_algo="md5", **dbs)
     errors = vault.init_vault(tables_csv, transitions_csv)
     assert errors == [], errors
     errors = vault.execute_flow(

@@ -35,6 +35,18 @@ def test_facade_covers_reference_surface():
         assert hasattr(MallardSparkVault, m), f"missing facade method: {m}"
 
 
+def test_constructor_parameters_pinned():
+    """The facade has one load path: no mode switch may creep back into
+    the constructor unnoticed."""
+    import inspect
+
+    params = list(inspect.signature(MallardSparkVault.__init__).parameters)
+    assert params == [
+        "self", "spark", "scripts_path", "stg_db", "dv_db", "bv_db",
+        "dm_db", "metadata_db", "hash_algo",
+    ]
+
+
 @pytest.fixture(scope="module")
 def vault(spark):
     drop_vault(spark)

@@ -218,3 +218,60 @@ def test_killed_mid_hub_stage_recovers(tmp_path):
     p2 = _run(fill(PHASE2_MID), base)
     assert p2.returncode == 0, f"phase2 failed:\n{p2.stdout}\n{p2.stderr[-3000:]}"
     assert "RECOVERY-OK" in p2.stdout
+
+
+CURRENT_TABLES_CSV = """base_name,rel_type,column_name,column_type,column_position,mapping
+account,stg,id,INTEGER,1,c
+account,stg,name,VARCHAR(32),2,c
+current_account,hub,id,INTEGER,1,bk
+account_current,hsat,current_account,,0,hk
+account_current,hsat,name,VARCHAR(32),1,c
+"""
+
+CURRENT_TRANSITIONS_CSV = """source_table,source_field,target_table,target_field,group_name,position,raw,transformation,transfer_type
+account,id,hub_current_account,id_bk,current_account,1,false,,bk
+account,current_account_hk,hsat_account_current,current_account,account_current,0,false,,sat_delta
+account,name,hsat_account_current,name,account_current,1,false,,f
+"""
+
+
+def test_recover_sees_tables_named_current(spark, tmp_path):
+    """A hub or satellite whose name contains ``current`` is a real DV
+    table: rows of a run the ledger never recorded are found and rolled
+    back like any other table's."""
+    from mallarddv_spark import MallardSparkVault
+    from mallarddv_spark.flow.recovery import orphan_run_ids
+
+    dbs = dict(stg_db="rc_stg", dv_db="rc_dv", bv_db="rc_bv",
+               dm_db="rc_dm", metadata_db="rc_meta")
+    for db in dbs.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    (tmp_path / "tables.csv").write_text(CURRENT_TABLES_CSV)
+    (tmp_path / "transitions.csv").write_text(CURRENT_TRANSITIONS_CSV)
+    (tmp_path / "account.csv").write_text("id,name\n1,ann\n2,bob\n")
+    v = MallardSparkVault(spark, **dbs)
+    assert v.init_vault(str(tmp_path / "tables.csv"),
+                        str(tmp_path / "transitions.csv")) == []
+    assert v.execute_flow("account", "src", str(tmp_path / "account.csv"),
+                          load_date_overwrite="2025-01-01 00:00:00") == []
+    hub_n = spark.table("rc_dv.hub_current_account").count()
+    sat_n = spark.table("rc_dv.hsat_account_current").count()
+    assert (hub_n, sat_n) == (2, 2)
+
+    # torn run 99: rows landed, the ledger never heard of it
+    spark.sql(
+        "INSERT INTO rc_dv.hub_current_account "
+        "SELECT 'torn_hk', timestamp'2025-01-02 00:00:00', 'src', 99, 3"
+    )
+    spark.sql(
+        "INSERT INTO rc_dv.hsat_account_current "
+        "SELECT 'torn_hk', timestamp'2025-01-02 00:00:00', false, 'hd', "
+        "'src', 99, 'cat'"
+    )
+    assert orphan_run_ids(spark, "rc_meta", "rc_dv") == [99]
+    assert v.recover() == {"hub_current_account": 1, "hsat_account_current": 1}
+    assert spark.table("rc_dv.hub_current_account").count() == hub_n
+    assert spark.table("rc_dv.hsat_account_current").count() == sat_n
+    assert v.recover() == {}
+    for db in dbs.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

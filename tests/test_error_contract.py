@@ -239,3 +239,43 @@ def test_float_hash_input_warns(spark, caplog):
     assert spark.table("fw_dv.hub_m").count() > 0
     for db in dbs.values():
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_concurrent_flows_serialize_run_ids(spark):
+    """Two threads driving flows on the SAME vault must not share a
+    run_id (global max+1 allocation would cross-delete on rollback);
+    the per-executor flow lock serializes them."""
+    import threading
+
+    dbs = dict(stg_db="cf_stg", dv_db="cf_dv", bv_db="cf_bv",
+               metadata_db="cf_meta")
+    for db in dbs.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    v = MallardSparkVault(spark, **dbs)
+    assert v.init_vault("tests/fixtures/tables.csv",
+                        "tests/fixtures/transitions.csv") == []
+
+    results = {}
+
+    def run(i):
+        results[i] = v.execute_flow(
+            "customer", f"src{i}", file_path="tests/fixtures/customer.csv",
+            load_date_overwrite="2025-01-01 00:00:00",
+            force_load=True,
+        )
+
+    ts = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join()
+    assert results[0] == [] and results[1] == []
+    run_ids = [
+        r.run_id
+        for r in spark.table("cf_meta.runinfo")
+        .filter("status = 'success'")
+        .collect()
+    ]
+    assert sorted(run_ids) == [1, 2]  # distinct ids, both succeeded
+    for db in dbs.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

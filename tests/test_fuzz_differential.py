@@ -112,10 +112,7 @@ def test_fuzz_two_batches_match_reference(spark, tmp_path_factory, batch1, batch
     con, mdv = _ref_system(tmp_path_factory)
 
     drop_vault(spark)
-    # parallel_stages here: the randomized two-batch lifecycle must match
-    # the reference engine row-for-row under CONCURRENT entity-load stages
-    # too (the sequential path is fuzzed by the sat_full lifecycle test)
-    vault = MallardSparkVault(spark, parallel_stages=True)
+    vault = MallardSparkVault(spark)
     assert vault.init_vault(
         os.path.join(FIXTURES, "tables.csv"),
         os.path.join(FIXTURES, "transitions.csv"),
