@@ -240,8 +240,10 @@ class MallardSparkVault:
         )
         self._meta.invalidate()
         # the catalog may be (re)built after a metadata reload — the
-        # hash-view DDL memo must not suppress re-creation against it
+        # hash-view DDL memo must not suppress re-creation against it, and
+        # the next flow re-reads the DV tables' run ids
         self._executor.hashview_issued.clear()
+        self._executor.run_hwm = None
 
     # -- crash recovery -----------------------------------------------------
 

@@ -1,17 +1,23 @@
 """End-to-end load orchestration (the reference's FlowExecutor,
 ``etl/flow_executor.py:59-253``).
 
-Stage order, short-circuit-on-error behavior, and the run ledger protocol
-are part of the public contract:
+Stage order, error behavior, and the run ledger protocol are part of the
+public contract:
 
 1. idempotence check (skip files already ingested, unless force_load)
 2. run-id allocation
 3. file → staging (only if the source has a staging-table definition)
-4. hash view refresh
-5. hub loads → link loads → satellite loads (each stage aborts the flow
-   on error)
+4. hash view refresh (steps 1–4 each abort the flow on error)
+5. hub, link and satellite loads start together: no load reads another
+   stage's table (links read only the hash view, satellites the hash view
+   and their own history), so the hub → link → satellite order of the
+   reference is an ordering, not a dependency. Loads of one table stay
+   ordered. A failing stage does not stop the other two; every stage
+   failure is reported, in the order hubs, links, sats. A failed flow may
+   therefore leave partial state from ANY stage — its ledger row says
+   'failure', and ``rollback_runs`` is the operator's tool to undo it.
 6. ledger write: 'start' + 'success'/'failure' rows land in ONE append at
-   flow end.
+   flow end — the only barrier after the stages start.
 
 Bookkeeping is batched for orchestration throughput (a metadata-driven
 flow is dozens of small Spark jobs; at cluster scale the data jobs
@@ -34,9 +40,10 @@ from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession, functions as F
 
-from mallarddv_spark.flow import runinfo
+from mallarddv_spark.flow import recovery, runinfo
+from mallarddv_spark.functions.hashing import quote_ident
 from mallarddv_spark.logging_utils import get_logger
-from mallarddv_spark.operators import hashview, hub, link, satellite
+from mallarddv_spark.operators import hashview, hub, link, parallel, satellite
 from mallarddv_spark.plans.model import MetadataCache
 from mallarddv_spark.sources import readers
 
@@ -79,6 +86,14 @@ class FlowExecutor:
         import threading
 
         self._flow_lock = threading.Lock()
+        #: highest run id known taken. None until the first flow (and again
+        #: after a metadata reload), whose ledger probe also folds in the
+        #: DV tables' max(run_id): a flow killed before its ledger append
+        #: leaves rows under an id the ledger never saw, and allocating
+        #: that id again would let the next success row adopt them. Later
+        #: flows allocate above this mark and the ledger max (flows
+        #: serialize on _flow_lock; single writer per metadata_db).
+        self.run_hwm: int | None = None
 
     def execute_flow(
         self,
@@ -120,12 +135,21 @@ class FlowExecutor:
 
         # 1-2. idempotence probe + run-id allocation (one ledger scan)
         try:
+            dv_tables = []
+            if self.run_hwm is None and spark.catalog.databaseExists(self.dv_db):
+                dv_tables = [
+                    f"{self.dv_db}.{quote_ident(t)}"
+                    for t in recovery.list_dv_tables(spark, self.dv_db)
+                ]
             ingested, run_id = runinfo.probe_ledger(
                 spark,
                 self.metadata_db,
                 source_table,
                 file_path if (file_path and not force_load) else None,
+                dv_tables=dv_tables,
             )
+            run_id = max(run_id, (self.run_hwm or 0) + 1)
+            self.run_hwm = run_id - 1 if ingested else run_id
             if ingested:
                 log.info("%s already ingested for %s — skipping", file_path, source_table)
                 if verbose:
@@ -298,7 +322,8 @@ class FlowExecutor:
                         source_table, tr.source_field, t,
                     )
         except Exception:  # advisory only — never block the flow
-            pass
+            log.debug("float hash-input check skipped for %s", source_table,
+                      exc_info=True)
         try:
             hashview.create_hash_view(
                 spark, self.stg_db, source_table, transitions,
@@ -320,7 +345,6 @@ class FlowExecutor:
         # e.g. {"no_python_stages": True, "no_nested_loop_joins": True}.
         if plan_guard:
             from mallarddv_spark.exceptions import DVConfigurationError
-            from mallarddv_spark.functions.hashing import quote_ident
             from mallarddv_spark.plans.audit import assert_plan
 
             try:
@@ -340,29 +364,39 @@ class FlowExecutor:
                 self._end(source_table, run_id, file_path, errors)
                 return errors
 
-        # 5. hubs → links → sats, short-circuiting. The hash view is NOT
-        # cached: each load stage reads it through parquet column pruning,
-        # so a hub load scans only its business-key columns and computes
-        # only its own hash — measured ~0.2 s per consumer at 600 k rows,
-        # versus ~8 s to materialize the full wide view into the block
-        # cache. At 100 TB the same holds structurally: the staging scan
-        # is columnar and pruned per consumer, while caching the full-width
-        # view would not fit cluster memory at all.
+        # 5. hubs, links and sats start together (module docstring). The
+        # hash view is NOT cached: each load stage reads it through parquet
+        # column pruning, so a hub load scans only its business-key columns
+        # and computes only its own hash — measured ~0.2 s per consumer at
+        # 600 k rows, versus ~8 s to materialize the full wide view into the
+        # block cache. At 100 TB the same holds structurally: the staging
+        # scan is columnar and pruned per consumer, while caching the
+        # full-width view would not fit cluster memory at all.
         stage_args = (
             spark, self.stg_db, self.dv_db, source_table, transitions,
             run_id, record_source, load_dts,
         )
-        for stage_name, fn in (
-            ("load_hubs", hub.load_hubs),
-            ("load_links", link.load_links),
-            ("load_sats", satellite.load_sats),
-        ):
-            try:
-                fn(*stage_args)
-            except Exception as ex:
-                errors.append((stage_name, str(ex)))
-                self._end(source_table, run_id, file_path, errors)
-                return errors
+        sc = spark.sparkContext
+        tag = f"flow={source_table} run={run_id}"
+
+        def stage(name, fn):
+            # every Spark job of the stage (its per-table threads inherit
+            # the property) is labelled in the UI and the event log
+            def run():
+                sc.setJobDescription(f"{tag} stage={name}")
+                try:
+                    fn(*stage_args)
+                finally:
+                    sc.setJobDescription(None)
+
+            return [run]
+
+        failures = parallel.run_per_table({
+            "load_hubs": stage("load_hubs", hub.load_hubs),
+            "load_links": stage("load_links", link.load_links),
+            "load_sats": stage("load_sats", satellite.load_sats),
+        })
+        errors.extend((name, str(ex)) for name, ex in failures)
 
         self._end(source_table, run_id, file_path, errors)
         return errors

@@ -19,7 +19,15 @@ Therefore: any ``run_id`` present in a DV table but absent from the
 ledger's success rows is torn state, and removing exactly those rows
 restores the pre-flow state ("rollback"). The flow is then re-runnable —
 its input file was never marked ingested, so the idempotence probe lets it
-through.
+through. The next flow never reuses a torn id: the executor's first flow
+allocates above the DV tables' max(run_id) as well as the ledger's, so the
+torn rows stay orphans until ``recover()`` removes them.
+
+A flow's hub, link and satellite stages run concurrently, so a kill can
+land in any stage, and can tear any subset of the flow's tables — even an
+append mid-commit. An append killed before its job commit leaves no rows
+but a ``_temporary`` directory, which the next append to that table would
+commit along with its own files; ``recover()`` purges those first.
 
 ``rollback_runs`` rewrites each affected table via write-new → drop →
 rename. The drop/rename pair is two catalog operations (the one
@@ -30,8 +38,9 @@ until recovery re-runs). On Delta/Iceberg this whole module collapses to
 
 Recovery is an explicit administrative action (``vault.recover()``), not
 an automatic side effect: a flow that *failed* with an error list also
-leaves partial state (matching reference behavior, where each SQL
-statement committed independently), and whether to roll that back is the
+leaves partial state — from any stage, since a failing stage does not stop
+the others (the reference's statements likewise committed independently)
+— and whether to roll that back with :func:`rollback_runs` is the
 operator's call.
 """
 
@@ -143,15 +152,40 @@ def rollback_runs(
     return removed
 
 
-def recover_vault(
-    spark: SparkSession, metadata_db: str, dv_db: str
-) -> dict[str, int]:
-    """Detect and roll back every torn (killed-before-success) run.
+def purge_uncommitted_writes(spark: SparkSession, dv_db: str) -> list[str]:
+    """Delete the ``_temporary`` directory that an append killed before
+    its job commit leaves in a DV table's location; returns the tables
+    purged. Hadoop's file output committer merges EVERY committed task
+    directory under ``_temporary/0`` at the next job commit to the same
+    path, so without this a torn append's rows would reappear, under the
+    torn run id, with the next flow's append to that table — after
+    ``recover()`` had already run. Only safe with no write in flight (the
+    single-writer contract; recovery is an explicit action)."""
+    from mallarddv_spark.sources.layout import dir_fs, table_location
+
+    purged = []
+    for t in list_dv_tables(spark, dv_db):
+        loc = table_location(spark, f"{dv_db}.{quote_ident(t)}")
+        fs, tmp = dir_fs(spark, loc.rstrip("/") + "/_temporary")
+        if fs.exists(tmp):
+            fs.delete(tmp, True)
+            purged.append(t)
+            log.warning("purged an uncommitted write from %s.%s", dv_db, t)
+    return purged
+
+
+def recover_vault(spark: SparkSession, metadata_db: str, dv_db: str) -> dict:
+    """Detect and roll back every torn (killed-before-success) run, after
+    purging the leftovers of appends killed before their commit.
 
     Safe to run at any time; a no-op when the vault is consistent. After
     recovery, re-running the interrupted flow reproduces the intended
-    state (its file was never marked ingested).
+    state (its file was never marked ingested). Returns {table:
+    rows_removed}, plus ``"<table> (uncommitted write)": "purged"``.
     """
-    return rollback_runs(
+    purged = purge_uncommitted_writes(spark, dv_db)
+    out: dict = rollback_runs(
         spark, metadata_db, dv_db, orphan_run_ids(spark, metadata_db, dv_db)
     )
+    out.update({f"{t} (uncommitted write)": "purged" for t in purged})
+    return out

@@ -8,21 +8,12 @@ already ingested successfully.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from datetime import datetime
 
 from pyspark.sql import SparkSession, functions as F
 
 from mallarddv_spark.plans.model import RUNINFO_SCHEMA
-
-
-def next_run_id(spark: SparkSession, metadata_db: str) -> int:
-    """``COALESCE(MAX(run_id), 0) + 1`` (reference GET_RUN_ID)."""
-    row = (
-        spark.table(f"{metadata_db}.runinfo")
-        .agg(F.coalesce(F.max("run_id"), F.lit(0)).alias("m"))
-        .collect()[0]
-    )
-    return int(row.m) + 1
 
 
 def register_run_info(
@@ -60,12 +51,21 @@ def probe_ledger(
     source_table: str,
     file_path: str | None,
     status: str = "success",
+    dv_tables: Sequence[str] = (),
 ) -> tuple[bool, int]:
     """One scan answering both bookkeeping questions a flow asks up front:
     (was this file already ingested successfully?, next run id).
 
-    Replaces back-to-back :func:`check_previous_ingestion` +
-    :func:`next_run_id` jobs over the same small table."""
+    ``dv_tables`` (qualified names) fold their ``run_id`` columns into the
+    same aggregate, so the next run id also clears every id that reached a
+    DV table without a ledger row — a killed flow's torn rows keep their id
+    as an orphan for ``recover()`` instead of being adopted by the next
+    flow's success row."""
+    rows = spark.table(f"{metadata_db}.runinfo")
+    for t in dv_tables:
+        rows = rows.unionByName(
+            spark.table(t).select("run_id"), allowMissingColumns=True
+        )
     agg = [F.coalesce(F.max("run_id"), F.lit(0)).alias("m")]
     if file_path is not None:
         agg.append(
@@ -75,30 +75,9 @@ def probe_ledger(
                 & (F.col("status") == status)
             ).alias("ingested")
         )
-    row = spark.table(f"{metadata_db}.runinfo").agg(*agg).collect()[0]
+    row = rows.agg(*agg).collect()[0]
     ingested = bool(row.ingested) if file_path is not None else False
     return ingested, int(row.m) + 1
-
-
-def check_previous_ingestion(
-    spark: SparkSession,
-    metadata_db: str,
-    source_table: str,
-    file_path: str,
-    status: str = "success",
-) -> bool:
-    """True if (file, table) already ingested with ``status``."""
-    return (
-        spark.table(f"{metadata_db}.runinfo")
-        .filter(
-            (F.col("source_file") == file_path)
-            & (F.col("source_table") == source_table)
-            & (F.col("status") == status)
-        )
-        .limit(1)
-        .count()
-        > 0
-    )
 
 
 def check_source_for_ingestion(

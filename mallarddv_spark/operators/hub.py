@@ -129,7 +129,9 @@ def load_hubs(
         loaded.append(f"{hub_name}:{group_name}")
     # different hubs load concurrently; groups feeding one hub stay ordered
     try:
-        run_per_table(tasks)
+        failures = run_per_table(tasks)
+        if failures:
+            raise failures[0][1]
     finally:
         if do_persist and shared["df"] is not None:
             shared["df"].unpersist()

@@ -110,5 +110,7 @@ def load_links(
 
         tasks.setdefault(link_name, []).append(load_group)
         loaded.append(f"{link_name}:{group_name}")
-    run_per_table(tasks)
+    failures = run_per_table(tasks)
+    if failures:
+        raise failures[0][1]
     return loaded

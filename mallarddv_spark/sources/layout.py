@@ -47,18 +47,22 @@ def suggest_buckets(total_bytes: int, target_bytes: int = 128 << 20) -> int:
     return p
 
 
+def table_location(spark, table_fqn: str) -> str:
+    """The catalog's storage location (URI) of a table."""
+    return (
+        spark.sql(f"DESCRIBE TABLE EXTENDED {table_fqn}")
+        .filter("col_name = 'Location'")
+        .first()[1]
+    )
+
+
 def table_file_stats(spark, table_fqn: str) -> dict:
     """File-level stats for a managed parquet table: ``{n_files,
     total_bytes, avg_bytes, small_files}`` (small = < 1/4 of the 128 MB
     target). Reads filesystem metadata only — no data scan."""
     import os
 
-    loc = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {table_fqn}")
-        .filter("col_name = 'Location'")
-        .first()[1]
-    )
-    path = loc.removeprefix("file:")
+    path = table_location(spark, table_fqn).removeprefix("file:")
     sizes = []
     for root, _dirs, files in os.walk(path):
         for f in files:

@@ -1,7 +1,11 @@
 """Crash-injection test: a flow killed (SIGKILL-equivalent ``os._exit``)
-between its hub append and satellite append must leave recoverable state —
-``vault.recover()`` removes the torn rows, and re-running the flow
-reproduces exactly the state of a never-crashed run.
+mid-flow must leave recoverable state — ``vault.recover()`` removes the
+torn rows, and re-running the flow reproduces exactly the state of a
+never-crashed run. A flow's hub, link and satellite stages run
+concurrently, so the kill points are chosen to be deterministic under that
+scheduler (right after the hub stage returns, or after one hub's append),
+and the torn state the other stages leave may vary: pre-recovery asserts
+accept any of it, post-recovery and re-run states are exact.
 
 Runs each phase in a subprocess against a SHARED derby-backed hive
 metastore (the in-memory catalog would forget the tables between
@@ -50,33 +54,39 @@ assert vault.execute_flow("orders", "crash", f"{base}/orders1.csv",
 print("BASELINE", spark.table("dv.hub_orders").count(),
       spark.table("dv.hsat_orders_details").count(), flush=True)
 
-# kill the driver AFTER the hub append of flow 2 commits, BEFORE satellites
-from mallarddv_spark.operators import satellite
-def boom(*a, **k):
+# kill the driver right AFTER the hub stage of flow 2 returns; the
+# satellite stage runs concurrently and may or may not have committed
+from mallarddv_spark.operators import hub
+_real = hub.load_hubs
+def load_then_die(*a, **k):
+    _real(*a, **k)
     os._exit(137)
-satellite.load_sats = boom
-import mallarddv_spark.flow.executor as executor
-executor.satellite.load_sats = boom
+hub.load_hubs = load_then_die
 vault.execute_flow("orders", "crash", f"{base}/orders2.csv",
                    load_date_overwrite="2025-01-02 00:00:00")
 print("SHOULD-NEVER-PRINT", flush=True)
 """
 
 PHASE2 = COMMON + """
-# torn state: flow 2's hub rows exist, no satellite rows, no ledger rows
+# torn state: flow 2's hub rows exist, no ledger rows; the satellite holds
+# none, its new versions, or versions + tombstone (2, 4 or 5 rows)
 hub_before = spark.table("dv.hub_orders").count()
+sat_before = spark.table("dv.hsat_orders_details").count()
 runs = spark.table("metadata.runinfo").count()
-print("TORN", hub_before, runs, flush=True)
+print("TORN", hub_before, runs, sat_before, flush=True)
+assert sat_before in (2, 4, 5), sat_before
 
 from mallarddv_spark.flow.recovery import orphan_run_ids
 orphans = orphan_run_ids(spark, "metadata", "dv")
 print("ORPHANS", orphans, flush=True)
+assert orphans == [2], orphans
 
 removed = vault.recover()
 print("REMOVED", sorted(removed.items()), flush=True)
 
 # rolled back to the post-flow-1 state
 assert spark.table("dv.hub_orders").count() == 2, "rollback should restore 2 hub rows"
+assert spark.table("dv.hsat_orders_details").count() == 2
 assert vault.recover() == {}, "second recover must be a no-op"
 
 # re-run the interrupted flow: file never reached 'success', so it loads
@@ -117,13 +127,15 @@ assert vault.execute_flow("orders", "crash", f"{base}/orders1.csv",
 print("BASELINE", spark.table("dv.hub_orders").count(),
       spark.table("dv.hub_custs").count(), flush=True)
 
-# kill the driver MID-HUB-STAGE: the first hub's append has committed,
-# the second hub's has not — a torn append inside one load stage
+# kill the driver MID-HUB-STAGE: hub_custs's append has committed,
+# hub_orders's has not — a torn append inside one load stage. Every other
+# call of the scheduler (the flow's three stages) runs as usual.
 from mallarddv_spark.operators import parallel
 _real = parallel.run_per_table
-def run_then_die(tasks, max_workers=4):
-    first = sorted(tasks)[0]
-    for fn in tasks[first]:
+def run_then_die(tasks):
+    if "hub_custs" not in tasks:
+        return _real(tasks)
+    for fn in tasks["hub_custs"]:
         fn()
     os._exit(137)
 parallel.run_per_table = run_then_die
@@ -133,8 +145,8 @@ print("SHOULD-NEVER-PRINT", flush=True)
 """
 
 PHASE2_MID = COMMON + """
-# torn: hub_custs (alphabetically first task chain) got flow 2's append,
-# hub_orders did not, no ledger success row
+# torn: hub_custs got flow 2's append, hub_orders did not, no ledger
+# success row
 custs_torn = spark.table("dv.hub_custs").count()
 orders_torn = spark.table("dv.hub_orders").count()
 print("TORN", custs_torn, orders_torn, flush=True)
@@ -188,8 +200,8 @@ def test_killed_flow_recovers(tmp_path):
     p2 = _run(fill(PHASE2), base)
     assert p2.returncode == 0, f"phase2 failed:\n{p2.stdout}\n{p2.stderr[-3000:]}"
     assert "RECOVERY-OK" in p2.stdout
-    # phase-2 observed the torn hub (3 rows) before rollback
-    assert "TORN 3" in p2.stdout
+    # phase-2 observed the torn hub (3 rows, no ledger row for run 2)
+    assert "TORN 3 2 " in p2.stdout
 
 
 def test_killed_mid_hub_stage_recovers(tmp_path):
@@ -273,5 +285,100 @@ def test_recover_sees_tables_named_current(spark, tmp_path):
     assert spark.table("rc_dv.hub_current_account").count() == hub_n
     assert spark.table("rc_dv.hsat_account_current").count() == sat_n
     assert v.recover() == {}
+    for db in dbs.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_killed_flow_run_id_not_reused(spark, tmp_path, monkeypatch):
+    """A flow killed before its ledger append leaves DV rows under a run id
+    the ledger never saw. A later flow — even from a new vault object, with
+    no ``recover()`` in between — must not allocate that id again: its
+    success row would adopt the torn rows and hide them from recovery."""
+    from mallarddv_spark import MallardSparkVault
+    from mallarddv_spark.flow.executor import FlowExecutor
+    from mallarddv_spark.flow.recovery import orphan_run_ids
+
+    dbs = dict(stg_db="ru_stg", dv_db="ru_dv", bv_db="ru_bv",
+               dm_db="ru_dm", metadata_db="ru_meta")
+    for db in dbs.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    (tmp_path / "tables.csv").write_text(TABLES_CSV)
+    (tmp_path / "transitions.csv").write_text(TRANSITIONS_CSV)
+    (tmp_path / "orders1.csv").write_text("order_id,status\n1,open\n2,open\n")
+    (tmp_path / "orders2.csv").write_text("order_id,status\n1,closed\n3,open\n")
+    (tmp_path / "orders3.csv").write_text("order_id,status\n1,closed\n3,done\n")
+    v = MallardSparkVault(spark, **dbs)
+    assert v.init_vault(str(tmp_path / "tables.csv"),
+                        str(tmp_path / "transitions.csv")) == []
+
+    def flow(vault, name, day):
+        return vault.execute_flow("orders", "src", str(tmp_path / name),
+                                  load_date_overwrite=f"2025-01-0{day} 00:00:00")
+
+    def rows_of(run_id):
+        return {t: spark.table(f"ru_dv.{t}").filter(f"run_id = {run_id}").count()
+                for t in ("hub_orders", "hsat_orders_details")}
+
+    assert flow(v, "orders1.csv", 1) == []
+
+    # plant a torn run: the DV stages commit, the ledger append never runs
+    with monkeypatch.context() as m:
+        m.setattr(FlowExecutor, "_end", lambda *a, **k: None)
+        assert flow(v, "orders2.csv", 2) == []
+    assert orphan_run_ids(spark, "ru_meta", "ru_dv") == [2]
+    torn = rows_of(2)
+    assert torn == {"hub_orders": 1, "hsat_orders_details": 3}
+
+    # a new process's vault on the same catalog, no recover() first
+    v2 = MallardSparkVault(spark, **dbs)
+    assert flow(v2, "orders3.csv", 3) == []
+    assert orphan_run_ids(spark, "ru_meta", "ru_dv") == [2]
+    assert rows_of(2) == torn
+    assert v2.recover() == torn
+    assert rows_of(2) == {"hub_orders": 0, "hsat_orders_details": 0}
+    assert orphan_run_ids(spark, "ru_meta", "ru_dv") == []
+    for db in dbs.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_recover_purges_uncommitted_append(spark, tmp_path):
+    """An append killed after its tasks committed but before its job
+    commit leaves files under the table's ``_temporary`` directory; the
+    next append to that table would commit them too. ``recover()`` must
+    purge them so the re-run reproduces the never-crashed state."""
+    import glob
+    import shutil
+
+    from mallarddv_spark import MallardSparkVault
+    from mallarddv_spark.sources.layout import table_location
+
+    dbs = dict(stg_db="uc_stg", dv_db="uc_dv", bv_db="uc_bv",
+               dm_db="uc_dm", metadata_db="uc_meta")
+    for db in dbs.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    (tmp_path / "tables.csv").write_text(TABLES_CSV)
+    (tmp_path / "transitions.csv").write_text(TRANSITIONS_CSV)
+    (tmp_path / "orders1.csv").write_text("order_id,status\n1,open\n2,open\n")
+    (tmp_path / "orders2.csv").write_text("order_id,status\n1,closed\n3,open\n")
+    v = MallardSparkVault(spark, **dbs)
+    assert v.init_vault(str(tmp_path / "tables.csv"),
+                        str(tmp_path / "transitions.csv")) == []
+    assert v.execute_flow("orders", "src", str(tmp_path / "orders1.csv"),
+                          load_date_overwrite="2025-01-01 00:00:00") == []
+
+    # a committed task of an append whose job commit never ran
+    loc = table_location(spark, "uc_dv.hub_orders").removeprefix("file:")
+    task = f"{loc}/_temporary/0/task_202501020000_0007_m_000000"
+    (tmp_path / "task").mkdir()
+    for i, part in enumerate(sorted(glob.glob(f"{loc}/part-*"))):
+        shutil.copy(part, tmp_path / "task" / f"part-{90000 + i}-torn.snappy.parquet")
+    shutil.copytree(tmp_path / "task", task)
+    assert spark.table("uc_dv.hub_orders").count() == 2
+
+    assert v.recover() == {"hub_orders (uncommitted write)": "purged"}
+    assert v.recover() == {}
+    assert v.execute_flow("orders", "src", str(tmp_path / "orders2.csv"),
+                          load_date_overwrite="2025-01-02 00:00:00") == []
+    assert spark.table("uc_dv.hub_orders").count() == 3
     for db in dbs.values():
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
