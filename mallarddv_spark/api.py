@@ -148,13 +148,12 @@ class MallardSparkVault:
         file_type: str | None = None,
         expectations: list | None = None,
         quarantine_table: str | None = None,
-        plan_guard: dict | None = None,
     ) -> list[tuple[str, str]]:
         return self._executor.execute_flow(
             source_table, record_source, file_path,
             load_date_overwrite, force_load, verbose,
             file_type=file_type, expectations=expectations,
-            quarantine_table=quarantine_table, plan_guard=plan_guard,
+            quarantine_table=quarantine_table,
         )
 
     # -- granular DDL/load API (1:1 with the reference facade,

@@ -4,7 +4,10 @@
 Stage order, error behavior, and the run ledger protocol are part of the
 public contract:
 
-1. idempotence check (skip files already ingested, unless force_load)
+1. torn-state and idempotence check: an executor's first flow refuses to
+   run while a DV table holds rows of a run the ledger never recorded (a
+   killed flow — ``vault.recover()`` removes them); files already
+   ingested are skipped unless force_load
 2. run-id allocation
 3. file → staging (only if the source has a staging-table definition)
 4. hash view refresh (steps 1–4 each abort the flow on error)
@@ -92,7 +95,9 @@ class FlowExecutor:
         #: leaves rows under an id the ledger never saw, and allocating
         #: that id again would let the next success row adopt them. Later
         #: flows allocate above this mark and the ledger max (flows
-        #: serialize on _flow_lock; single writer per metadata_db).
+        #: serialize on _flow_lock; single writer per metadata_db). While
+        #: it is None every flow also checks for such orphan ids and is
+        #: refused until recover() removes them.
         self.run_hwm: int | None = None
 
     def execute_flow(
@@ -106,14 +111,12 @@ class FlowExecutor:
         file_type: str | None = None,
         expectations: list | None = None,
         quarantine_table: str | None = None,
-        plan_guard: dict | None = None,
     ) -> list[tuple[str, str]]:
         # same-vault flows serialize (see _flow_lock rationale in __init__)
         with self._flow_lock:
             return self._execute_flow(
                 source_table, record_source, file_path, load_date_overwrite,
                 force_load, verbose, file_type, expectations, quarantine_table,
-                plan_guard,
             )
 
     def _execute_flow(
@@ -127,7 +130,6 @@ class FlowExecutor:
         file_type: str | None = None,
         expectations: list | None = None,
         quarantine_table: str | None = None,
-        plan_guard: dict | None = None,
     ) -> list[tuple[str, str]]:
         spark = self.spark
         errors: list[tuple[str, str]] = []
@@ -141,13 +143,24 @@ class FlowExecutor:
                     f"{self.dv_db}.{quote_ident(t)}"
                     for t in recovery.list_dv_tables(spark, self.dv_db)
                 ]
-            ingested, run_id = runinfo.probe_ledger(
+            ingested, run_id, orphans = runinfo.probe_ledger(
                 spark,
                 self.metadata_db,
                 source_table,
                 file_path if (file_path and not force_load) else None,
                 dv_tables=dv_tables,
             )
+            if orphans:
+                # a killed flow's rows: building on them would leave the
+                # vault wrong even after recover() (its anti-joins and
+                # change detection would read rows recovery then deletes)
+                msg = (
+                    f"torn state: run id(s) {orphans} reached {self.dv_db} "
+                    "with no ledger row (a killed flow); run vault.recover() "
+                    "before the next flow"
+                )
+                log.error("flow refused: %s — %s", source_table, msg)
+                return [("torn_state", msg)]
             run_id = max(run_id, (self.run_hwm or 0) + 1)
             self.run_hwm = run_id - 1 if ingested else run_id
             if ingested:
@@ -335,35 +348,6 @@ class FlowExecutor:
             self._end(source_table, run_id, file_path, errors)
             return errors
 
-        # 4b. optional plan guard: audit the hash view's physical plan —
-        # the one frame every hub/link/sat load reads through — BEFORE any
-        # vault write. A user staging view or metadata transformation that
-        # plants a nested-loop join, a Python row stage, or an unexpected
-        # shuffle fails the flow here (ledger 'failure', no partial vault
-        # state) instead of melting down on a 100 TB run. ``plan_guard``
-        # takes :func:`mallarddv_spark.plans.audit.assert_plan` kwargs,
-        # e.g. {"no_python_stages": True, "no_nested_loop_joins": True}.
-        if plan_guard:
-            from mallarddv_spark.exceptions import DVConfigurationError
-            from mallarddv_spark.plans.audit import assert_plan
-
-            try:
-                assert_plan(
-                    spark.table(
-                        f"{self.stg_db}."
-                        f"{quote_ident(source_table + '_hash_vw')}"
-                    ),
-                    **plan_guard,
-                )
-            except TypeError as ex:
-                errors.append(("plan_guard", f"bad plan_guard option: {ex}"))
-                self._end(source_table, run_id, file_path, errors)
-                return errors
-            except DVConfigurationError as ex:
-                errors.append(("plan_guard", str(ex)))
-                self._end(source_table, run_id, file_path, errors)
-                return errors
-
         # 5. hubs, links and sats start together (module docstring). The
         # hash view is NOT cached: each load stage reads it through parquet
         # column pruning, so a hub load scans only its business-key columns
@@ -478,11 +462,12 @@ class FlowExecutor:
         except Exception as ex:
             # a lost ledger row must not fail the flow (the reference
             # tolerated ledger errors too), but it must not vanish either:
-            # the outcome was not durably recorded, so the idempotence
-            # probe will re-run this file on replay — surface that
+            # the flow's rows are now torn state, so the next flow checks
+            # for orphans again and is refused until recover()
             log.warning(
                 "ledger write failed for %s run=%s: %s — flow outcome not "
-                "durably recorded (replay will re-ingest this file)",
+                "durably recorded (run vault.recover() before the next flow)",
                 source_table, run_id, ex,
             )
+            self.run_hwm = None
             errors.append(("write_runinfo", str(ex)))

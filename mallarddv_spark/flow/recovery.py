@@ -79,24 +79,11 @@ def orphan_run_ids(
     that *failed* writes 'start'+'failure' rows and deliberately keeps its
     partial state, matching the reference's per-statement commits; pass
     those run_ids to :func:`rollback_runs` explicitly if rollback is
-    wanted.) One union-distinct scan over the run_id columns + one ledger
-    scan."""
-    tables = list_dv_tables(spark, dv_db)
+    wanted.) The same one-job aggregate a flow's ledger probe runs."""
+    tables = [f"{dv_db}.{quote_ident(t)}" for t in list_dv_tables(spark, dv_db)]
     if not tables:
         return []
-    ids = None
-    for t in tables:
-        cur = spark.table(f"{dv_db}.{quote_ident(t)}").select("run_id").distinct()
-        ids = cur if ids is None else ids.unionByName(cur)
-    dv_ids = {r.run_id for r in ids.distinct().collect()}
-    known = {
-        r.run_id
-        for r in spark.table(f"{metadata_db}.runinfo")
-        .select("run_id")
-        .distinct()
-        .collect()
-    }
-    return sorted(i for i in dv_ids if i is not None and i not in known)
+    return runinfo.probe_ledger(spark, metadata_db, "", None, dv_tables=tables)[2]
 
 
 def rollback_runs(

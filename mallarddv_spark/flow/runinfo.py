@@ -9,27 +9,10 @@ already ingested successfully.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from datetime import datetime
 
 from pyspark.sql import SparkSession, functions as F
 
 from mallarddv_spark.plans.model import RUNINFO_SCHEMA
-
-
-def register_run_info(
-    spark: SparkSession,
-    metadata_db: str,
-    source_table: str,
-    run_id: int,
-    file_path: str | None,
-    status: str,
-    message: str = "",
-) -> None:
-    write_ledger_rows(
-        spark,
-        metadata_db,
-        [(source_table, run_id, datetime.now(), file_path, status, message[:4095])],
-    )
 
 
 def write_ledger_rows(
@@ -52,21 +35,33 @@ def probe_ledger(
     file_path: str | None,
     status: str = "success",
     dv_tables: Sequence[str] = (),
-) -> tuple[bool, int]:
-    """One scan answering both bookkeeping questions a flow asks up front:
-    (was this file already ingested successfully?, next run id).
+) -> tuple[bool, int, list[int]]:
+    """One scan answering the bookkeeping questions a flow asks up front:
+    (was this file already ingested successfully?, next run id, orphan
+    run ids).
 
     ``dv_tables`` (qualified names) fold their ``run_id`` columns into the
     same aggregate, so the next run id also clears every id that reached a
     DV table without a ledger row — a killed flow's torn rows keep their id
     as an orphan for ``recover()`` instead of being adopted by the next
-    flow's success row."""
+    flow's success row. The same aggregate returns those orphans — ids in
+    a DV table with no ledger row of any status, the rule
+    :func:`~mallarddv_spark.flow.recovery.orphan_run_ids` applies; without
+    ``dv_tables`` the list is empty."""
     rows = spark.table(f"{metadata_db}.runinfo")
     for t in dv_tables:
         rows = rows.unionByName(
-            spark.table(t).select("run_id"), allowMissingColumns=True
+            spark.table(t).select("run_id", F.lit(True).alias("in_dv")),
+            allowMissingColumns=True,
         )
     agg = [F.coalesce(F.max("run_id"), F.lit(0)).alias("m")]
+    if dv_tables:
+        agg.append(
+            F.array_except(
+                F.collect_set(F.when(F.col("in_dv"), F.col("run_id"))),
+                F.collect_set(F.when(F.col("in_dv").isNull(), F.col("run_id"))),
+            ).alias("orphans")
+        )
     if file_path is not None:
         agg.append(
             F.max(
@@ -77,26 +72,5 @@ def probe_ledger(
         )
     row = rows.agg(*agg).collect()[0]
     ingested = bool(row.ingested) if file_path is not None else False
-    return ingested, int(row.m) + 1
-
-
-def check_source_for_ingestion(
-    spark: SparkSession, metadata_db: str, source_table: str
-) -> bool:
-    """True if ``source_table`` should be loaded from file — i.e. it has a
-    ``rel_type='stg'`` definition in ``metadata.tables``.
-
-    Implements the *documented intent* ("True if the source_table should be
-    loaded from file", reference ``metadata_manager.py:203-210``). The
-    reference's actual SQL (``ORDER BY 1 ASC LIMIT 1`` over ``rel_type='stg'``
-    booleans, ``db/sql_templates.py:77-84``) returns False whenever the base
-    name also has non-stg rows, silently skipping the demo's file load —
-    a verified latent defect we deliberately do not reproduce.
-    """
-    return (
-        spark.table(f"{metadata_db}.tables")
-        .filter((F.col("base_name") == source_table) & (F.col("rel_type") == "stg"))
-        .limit(1)
-        .count()
-        > 0
-    )
+    orphans = sorted(row.orphans) if dv_tables else []
+    return ingested, int(row.m) + 1, orphans

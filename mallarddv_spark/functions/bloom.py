@@ -31,6 +31,9 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from mallarddv_spark.exceptions import DVConfigurationError
+from mallarddv_spark.logging_utils import get_logger
+
+log = get_logger("bloom")
 
 # extra-view hash salts (arbitrary but pinned: stored filters must keep
 # probing identically forever)
@@ -182,60 +185,6 @@ def bloom_contains(value, bloom_col, m: int, n_hashes: int) -> Column:
     )
 
 
-def bloom_semi_join(
-    df: DataFrame,
-    value_col: str,
-    keys: DataFrame,
-    keys_col: str | None = None,
-    fpp: float = 1e-4,
-    expected_items: int | None = None,
-    exact: bool = False,
-) -> DataFrame:
-    """Semi-join reduction through a Bloom filter: keep the rows of
-    ``df`` whose ``value_col`` is (probably) among the distinct values
-    of ``keys[keys_col]`` — the big-⋈-big pre-filter for when the key
-    side is too large for a broadcast HASH join but its BLOOM still
-    broadcasts. A hash relation costs ~32+ bytes per key (10⁹ keys ≈
-    32 GB, past Spark's 8 GB ceiling); the bloom at ``fpp=1e-4`` costs
-    ~2.4 bytes per key (10⁹ keys ≈ 2.4 GB) — so the probe side is
-    reduced by a PURE PROJECTION, no shuffle, and only the survivors
-    pay the exact join's exchange. This is the manual form of Spark's
-    runtime row-level filtering, available to any plan shape and any
-    stored filter.
-
-    With ``exact=False`` (default) the result is a SUPERSET of the true
-    semi-join: non-members leak through at ~``fpp``. ``exact=True``
-    chains the real ``left_semi`` join over the survivors — exact
-    output, with the shuffle sized by the reduced side. Rows with NULL
-    keys are dropped either way (matching exact semi-join semantics).
-
-    ``expected_items`` skips the sizing count when the key cardinality
-    is already known (e.g. from a manifest).
-    """
-    # Materialize the one-row filter ONCE: without the checkpoint the
-    # expensive fold-over-all-keys plan would execute twice — once for the
-    # geometry .first() below and again under the broadcast crossJoin —
-    # and at the advertised 10^9-key scale that doubles the build cost.
-    # The checkpointed frame is one row of bits + geometry, so the
-    # materialization itself is free.
-    bloom = build_bloom(
-        keys, keys_col or value_col, fpp, expected_items
-    ).localCheckpoint(eager=True)
-    geo = bloom.select("m", "n_hashes").first()
-    m, n_hashes = int(geo.m), int(geo.n_hashes)
-    survivors = (
-        df.crossJoin(F.broadcast(bloom.select("__bloom")))
-        .filter(bloom_contains(F.col(value_col), F.col("__bloom"), m, n_hashes))
-        .drop("__bloom")
-    )
-    if exact:
-        probe = _distinct_vals(keys, keys_col or value_col).select(
-            F.col("__v").alias(value_col)
-        )
-        survivors = survivors.join(probe, value_col, "left_semi")
-    return survivors
-
-
 def merge_blooms(a: DataFrame, b: DataFrame, check: bool = True) -> DataFrame:
     """Union two filters of IDENTICAL geometry (elementwise bit OR): the
     merged filter contains every value either side contains.
@@ -367,7 +316,8 @@ def bloom_append(
         try:
             vals._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:  # never fail an append over cleanup
-            pass
+            log.debug("bloom_append: checkpoint unpersist failed for %s",
+                      path, exc_info=True)
 
 
 def heal_bloom(spark: SparkSession, path: str) -> str | None:

@@ -32,26 +32,7 @@ from __future__ import annotations
 import datetime
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-
-
-def _lit(v) -> Column:
-    """One value → one literal Column (recursing into lists)."""
-    if isinstance(v, (list, tuple)):
-        return F.array(*[_lit(x) for x in v])
-    if isinstance(v, bool):  # before int: bool is an int subclass
-        return F.lit(v)
-    if isinstance(v, int):
-        # plain ints surface as IntegerType when they fit; schema casts
-        # (below) pick the final width
-        return F.lit(v)
-    if isinstance(v, float):
-        return F.lit(float(v))
-    if isinstance(v, datetime.datetime):
-        return F.lit(v)
-    if v is None:
-        return F.lit(None)
-    return F.lit(v)
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 def _sql_lit(v) -> str:

@@ -61,13 +61,3 @@ def shred_variant(
     if json_col != variant_col and json_col not in fields:
         out = out.drop(json_col)
     return out
-
-
-def inferred_payload_schema(df: DataFrame, json_col: str) -> str:
-    """The merged schema of every payload in the column
-    (``schema_of_variant_agg``) — the discovery step before choosing which
-    fields to shred. One aggregate scan; returns the DDL-ish string."""
-    row = df.select(
-        F.schema_of_variant_agg(F.try_parse_json(F.col(json_col))).alias("s")
-    ).first()
-    return row.s

@@ -3,20 +3,15 @@ al. 2007), count-min (Cormode & Muthukrishnan 2005), fixed-range
 histogram, and KMV bottom-k (Bar-Yossef et al. 2002).
 
 Reference scope note: the reference engine has no sketch tier — this
-extends the corpus-statistics family. Two sketch modules coexist by
-design:
-
-* :mod:`mallarddv_spark.operators.sketches` wraps Spark's JVM
-  DataSketches aggregates (``hll_sketch_agg`` / theta) — fastest, with
-  theta set algebra, but the state is an OPAQUE binary: only Spark (at
-  a compatible DataSketches version) can read it back, and no oracle
-  can replay the estimate.
-* THIS module keeps the register table as a plain ``(bucket, rho)``
-  DataFrame — engine-portable parquet, groupBy-max merges, and a
-  closed-form estimate that replays bit-for-bit in the DuckDB oracle
-  (md5 hash mode). That replayability is what lets the driver gate
-  hash-compare the estimate VALUE, and the plain-data format is what a
-  heterogeneous lake (Spark writers, DuckDB/Trino readers) can share.
+extends the corpus-statistics family. The register table is a plain
+``(bucket, rho)`` DataFrame — engine-portable parquet, groupBy-max
+merges, and a closed-form estimate that replays bit-for-bit in the
+DuckDB oracle (md5 hash mode). That replayability is what lets the
+gate queries hash-compare the estimate VALUE, and the plain-data format
+is what a heterogeneous lake (Spark writers, DuckDB/Trino readers) can
+share. Spark's own JVM DataSketches aggregates (``hll_sketch_agg`` /
+theta) are faster, but their state is an opaque binary that only Spark
+can read back and no oracle can replay.
 
 At 100 TB the questions that matter — "how many distinct tokens/urls/
 doc-ids so far?" — are INCREMENTAL: a streaming crawl gate folds each

@@ -744,7 +744,7 @@ def export_gpt2_files(bpe: dict, path: str, specials: list[str] | None = None) -
     ``["<|endoftext|>"]``) — the interop surface every byte-level BPE
     stack reads (HF tokenizers' ``BPE.from_file`` consumes exactly this
     pair; GPT-2's own release is 256 bytes + 50 000 merges + 1
-    special). The ARPA-export precedent: driver-streamed text, the
+    special). The text is collected and written locally: the
     artifacts are vocabulary-sized by construction.
 
     Whitespace-mode models are rejected: the format encodes tokens as
@@ -800,7 +800,7 @@ def load_gpt2_files(path: str) -> dict:
     """Read a GPT-2 ``merges.txt``/``vocab.json`` pair back into a model
     dict (``byte_level=True, lowercase=False`` — the conventions the
     format implies). Works on externally-produced pairs too (the import
-    half of the interop loop, like ``textops.load_arpa``): the vocab is
+    half of the interop loop): the vocab is
     checked to contain the byte alphabet and every merge product, so a
     truncated or mismatched pair fails loudly instead of mis-encoding.
     """

@@ -2932,155 +2932,6 @@ def html_to_text(html: Column | str) -> Column:
     return F.regexp_replace(s, r"^\s+|\s+$", "")
 
 
-def fuzzy_decontaminate(
-    train: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-    bench_id_col: str | None = None,
-    bench_text_col: str | None = None,
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_size: int = 3,
-    threshold: float = 0.6,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """NEAR-duplicate decontamination — the fuzzy complement of
-    :func:`decontaminate` (exact n-gram overlap misses an eval item
-    that was lightly paraphrased or partially quoted into a training
-    page; MinHash agreement at a lower bar catches it — the
-    fuzzy-dedup-against-benchmark pass the big curation stacks run
-    alongside the exact one).
-
-    Returns one row per training document: ``(id, contaminated,
-    n_bench_matches, max_est_jaccard)`` — a doc is contaminated when
-    its MinHash signature agrees with ANY benchmark doc at ≥
-    ``threshold`` (signature-component agreement ≈ Jaccard of
-    ``shingle_size``-gram sets; the LSH band pass bounds candidates
-    exactly as :func:`dedup.minhash_lsh_pairs`).
-
-    Scale shape: the benchmark side (signatures AND band rows) is
-    BROADCAST — eval sets are thousands of docs, kilobyte signatures —
-    so the 100 TB training side streams through two
-    BroadcastHashJoins and never shuffles; candidate volume is bounded
-    by band collisions, never |train| × |bench|. For a stored,
-    incrementally-maintained benchmark set use
-    ``dedup.build_minhash_index`` + ``neardup_against_index`` (the
-    same shape with the benchmark on disk).
-    """
-    from mallarddv_spark.operators.dedup import (
-        _band_rows,
-        minhash_signatures,
-    )
-
-    b_id = bench_id_col or id_col
-    b_text = bench_text_col or text_col
-    sig_t = minhash_signatures(
-        train.select(F.col(id_col).alias("doc_id"),
-                     F.col(text_col).alias("text")),
-        "doc_id", "text", num_perm, shingle_size, None, hash_mode,
-    )
-    sig_b = minhash_signatures(
-        benchmark.select(F.col(b_id).alias("doc_id"),
-                         F.col(b_text).alias("text")),
-        "doc_id", "text", num_perm, shingle_size, None, hash_mode,
-    )
-    bands_t = _band_rows(sig_t, num_perm, bands).select(
-        F.col("doc_id").alias("__tid"), "band", "bh"
-    )
-    bands_b = _band_rows(sig_b, num_perm, bands).select(
-        F.col("doc_id").alias("__bid"), "band", "bh"
-    )
-    candidates = (
-        bands_t.join(F.broadcast(bands_b), ["band", "bh"])
-        .select("__tid", "__bid")
-        .distinct()
-    )
-    t_sigs = sig_t.select(
-        F.col("doc_id").alias("__tid"),
-        F.array(*[f"sig_{i}" for i in range(num_perm)]).alias("__tsig"),
-    )
-    b_sigs = sig_b.select(
-        F.col("doc_id").alias("__bid"),
-        F.array(*[f"sig_{i}" for i in range(num_perm)]).alias("__bsig"),
-    )
-    est = F.expr(
-        "round(aggregate(zip_with(__tsig, __bsig, (a, b) -> "
-        f"CASE WHEN a = b THEN 1.0 ELSE 0.0 END), cast(0.0 as double), "
-        f"(acc, x) -> acc + x) / {int(num_perm)}, 6)"
-    )
-    hits = (
-        t_sigs.join(candidates, "__tid")
-        .join(F.broadcast(b_sigs), "__bid")
-        .withColumn("__est", est)
-        .filter(F.col("__est") >= float(threshold))
-        .groupBy("__tid")
-        .agg(
-            F.countDistinct("__bid").cast("bigint").alias(
-                "n_bench_matches"
-            ),
-            F.max("__est").alias("max_est_jaccard"),
-        )
-    )
-    return (
-        train.select(F.col(id_col).alias("id"))
-        .join(hits, F.col("id") == F.col("__tid"), "left")
-        .select(
-            "id",
-            F.col("__tid").isNotNull().alias("contaminated"),
-            F.coalesce("n_bench_matches", F.lit(0).cast("bigint")).alias(
-                "n_bench_matches"
-            ),
-            "max_est_jaccard",
-        )
-    )
-
-
-def corpus_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str,
-    text_col: str,
-    normalize: bool = False,
-) -> DataFrame:
-    """Diff two corpus snapshots by document id and content
-    fingerprint — the audit a pipeline runs between crawl drops before
-    re-spending dedup/tokenize compute: ``(id, verdict)`` with verdict
-    ∈ ``added`` (id only in new), ``removed`` (id only in old),
-    ``changed`` (same id, different content), ``unchanged``.
-
-    ``normalize=True`` fingerprints whitespace-collapsed lowercase text
-    (the :func:`incremental_dedup` normalization), so formatting-only
-    churn counts as unchanged.
-
-    Scale shape: one md5 projection per side + one full-outer hash
-    join on the id — no windows, no collects; verdict counts are one
-    further groupBy. Duplicate ids within a snapshot are collapsed to
-    their min fingerprint first (deterministic; a snapshot SHOULD be
-    id-unique — run :func:`incremental_dedup` upstream if not)."""
-    content = F.col(text_col)
-    if normalize:
-        content = F.trim(F.regexp_replace(F.lower(content), r"\s+", " "))
-    fp = F.md5(content)
-
-    def side(df, name):
-        return (
-            df.select(F.col(id_col).alias("id"), fp.alias(name))
-            .groupBy("id")
-            .agg(F.min(name).alias(name))
-        )
-
-    o = side(old, "__old_fp")
-    n = side(new, "__new_fp")
-    verdict = (
-        F.when(F.col("__old_fp").isNull(), F.lit("added"))
-        .when(F.col("__new_fp").isNull(), F.lit("removed"))
-        .when(F.col("__old_fp") == F.col("__new_fp"), F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return o.join(n, "id", "full_outer").select("id", verdict.alias("verdict"))
-
-
 def weighted_sample(
     df: DataFrame,
     id_col: str,

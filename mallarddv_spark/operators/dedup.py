@@ -30,36 +30,6 @@ from mallarddv_spark.exceptions import DVConfigurationError
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(
-    df: DataFrame, id_col: str, text_col: str, normalize: bool = False
-) -> DataFrame:
-    """Keep one row per distinct content hash (lowest id wins).
-
-    One shuffle on the md5 key. With ``normalize``, lowercases and collapses
-    whitespace first (catches trivially-reformatted duplicates).
-    """
-    content = F.col(text_col)
-    if normalize:
-        content = F.trim(F.regexp_replace(F.lower(content), r"\s+", " "))
-    fp = F.md5(content).alias("__fp")
-    ranked = df.select(fp, F.col(id_col).alias("__id"))
-    keep = ranked.groupBy("__fp").agg(F.min("__id").alias("__keep"))
-    # AQE picks broadcast vs shuffle for the semi-join based on |keep|
-    return df.join(
-        keep.select(F.col("__keep").alias(id_col)), on=id_col, how="left_semi"
-    )
-
-
-def duplicate_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Clusters of exact duplicates: (fingerprint, n_docs, keep_doc_id)."""
-    return (
-        df.select(F.md5(text_col).alias("fingerprint"), F.col(id_col))
-        .groupBy("fingerprint")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_doc_id"))
-        .filter("n_docs > 1")
-    )
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -617,17 +587,23 @@ def minhash_index_append(
     """Append a new batch's signatures + band rows to the stored index
     (parameters come from the index itself — incompatible mixes are
     impossible). Caller dedups ids; appending an existing doc_id simply
-    stores a second identical signature."""
+    stores a second identical signature.
+
+    ``bands`` is written before ``sigs``: a stream's replay fence reads
+    ``sigs``, so a crash between the two appends leaves the batch
+    unfenced and its replay re-appends it. The orphan band rows are
+    harmless meanwhile — probes inner-join ``sigs``, so a band row without
+    its signature never hits — and compaction dedups ``(doc_id, band)``."""
     spark = df.sparkSession
     p = _minhash_index_params(spark, path)
     sigs = minhash_signatures(
         df, id_col, text_col, p["num_perm"], p["shingle_size"],
         p["max_shingle_df"], p["hash_mode"],
     )
-    sigs.write.mode("append").parquet(f"{path}/sigs")
     _band_rows(sigs, p["num_perm"], p["bands"]).write.mode("append").parquet(
         f"{path}/bands"
     )
+    sigs.write.mode("append").parquet(f"{path}/sigs")
 
 
 _INDEX_SUBDIRS = ("sigs", "bands")
@@ -1135,36 +1111,4 @@ def substring_duplicate_spans(
             F.col("start_b").cast("bigint").alias("start_b"),
             "run_tokens",
         )
-    )
-
-
-def mark_substring_duplicates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_run_tokens: int = 20,
-    **span_kwargs,
-) -> DataFrame:
-    """Per-document verdict over :func:`substring_duplicate_spans`: flag
-    every document that shares a >= ``min_run_tokens`` verbatim run with
-    an EARLIER (smaller-id) document — the keep-first filter policy.
-    Returns the input plus ``(substr_dup boolean, n_dup_spans bigint,
-    max_shared_run bigint)``; survivors have ``substr_dup = false``.
-
-    The span table is sized by true overlaps, not the corpus, so the
-    verdict join is a plain hash (or AQE-broadcast) join on id."""
-    spans = substring_duplicate_spans(
-        df, id_col, text_col, min_run_tokens, **span_kwargs
-    )
-    flagged = spans.groupBy(F.col("doc_b").alias(id_col)).agg(
-        F.count("*").alias("n_dup_spans"),
-        F.max("run_tokens").alias("max_shared_run"),
-    )
-    return df.join(flagged, on=id_col, how="left").select(
-        *df.columns,
-        F.col("n_dup_spans").isNotNull().alias("substr_dup"),
-        F.coalesce("n_dup_spans", F.lit(0)).cast("bigint").alias("n_dup_spans"),
-        F.coalesce("max_shared_run", F.lit(0)).cast("bigint").alias(
-            "max_shared_run"
-        ),
     )

@@ -161,26 +161,6 @@ def chunk_payload(
     )
 
 
-def assemble_chunks(chunks: DataFrame) -> DataFrame:
-    """Reassemble :func:`chunk_payload` output into (media_id, payload).
-    One shuffle on media_id; ``concat`` of the ordered chunk array is
-    JVM-side."""
-    return (
-        chunks.groupBy("media_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("chunk_idx", "chunk"))
-            ).alias("ordered")
-        )
-        .select(
-            "media_id",
-            F.expr(
-                "aggregate(ordered, cast(X'' as binary), (acc, c) -> concat(acc, c.chunk))"
-            ).alias("payload"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # decode kernels
 # ---------------------------------------------------------------------------
@@ -332,176 +312,3 @@ def extract_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
             yield out[[f.name for f in FEATURE_SCHEMA.fields]]
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """STUB: image resize. Real kernel: PIL ``Image.resize`` inside the same
-    mapInPandas shape as :func:`extract_features`; here payloads pass
-    through and the target dims are recorded (schema/plumbing exercised)."""
-    return media.withColumn("target_width", F.lit(width)).withColumn(
-        "target_height", F.lit(height)
-    )
-
-
-def sample_frames(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """STUB: video frame sampling — records the sampling spec; the ffmpeg
-    kernel slots into the mapInPandas pattern above."""
-    return media.withColumn("frame_stride", F.lit(every_n))
-
-
-def write_webdataset_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    media_col: str,
-    meta_cols: list[str] | None = None,
-    n_shards: int = 8,
-    ext: str = "bin",
-) -> dict:
-    """Export a multimodal corpus as WebDataset-style tar shards —
-    ``shard-00000.tar`` … each holding, per sample, a ``{key}.{ext}``
-    member with the binary payload and a ``{key}.json`` member with the
-    metadata columns (the img2dataset / WebDataset pairing convention
-    multimodal training loaders stream directly).
-
-    Layout & determinism: samples hash to shards by id (stable under
-    corpus growth — the ``split_assign`` discipline), order ``key``
-    ascending inside a shard, and every tar member is written with
-    zeroed mtime/uid/gid — two runs over the same data produce
-    byte-identical archives. Each shard is written by exactly ONE task
-    (rows repartition by shard id) to a temp name and atomically
-    ``os.replace``d, so a retried task overwrites cleanly. A
-    ``manifest.json`` is written LAST from a read-back header scan of
-    the tars (counts certify the bytes on disk, not the plan), so its
-    presence marks a complete export.
-
-    Filesystem contract: the writer runs in plain Python on executors
-    (tar assembly is byte I/O, not compute) and opens ``path`` through
-    POSIX — local disks, NFS, or FUSE-mounted object stores. For
-    HDFS/S3-native output use the parquet/JSONL trainer shards
-    (``textops.write_training_shards``); tar is specifically the
-    multimodal interchange format.
-
-    Scale shape: one hash shuffle on the shard id; payload bytes
-    stream from the scan through the tar writer without driver
-    involvement; the manifest pass reads tar HEADERS only.
-    """
-    import glob
-    import json
-    import os
-
-    from mallarddv_spark.exceptions import DVConfigurationError
-
-    if int(n_shards) < 1:
-        raise DVConfigurationError(
-            "write_webdataset_shards: n_shards must be >= 1"
-        )
-    if os.path.exists(os.path.join(path, "manifest.json")):
-        raise DVConfigurationError(
-            f"write_webdataset_shards: {path} already holds a completed "
-            "export (manifest.json present)"
-        )
-    metas = list(meta_cols or [])
-    os.makedirs(path, exist_ok=True)
-    # A prior ABORTED export (no manifest, so the guard above passes)
-    # may have left shard tars — possibly from a run with a different
-    # n_shards — that a post-write glob would silently count into this
-    # run's manifest. Refuse to certify over them; orphaned .tmp-* files
-    # from failed task attempts were never renamed live and are safe to
-    # sweep.
-    stale = sorted(glob.glob(os.path.join(path, "shard-*.tar")))
-    if stale:
-        raise DVConfigurationError(
-            "write_webdataset_shards: target holds "
-            f"{len(stale)} shard tar(s) from an aborted export with no "
-            f"manifest (e.g. {os.path.basename(stale[0])}); remove them "
-            "or export to a fresh directory"
-        )
-    for orphan in glob.glob(os.path.join(path, "*.tmp-*")):
-        os.remove(orphan)
-    shard = F.pmod(
-        F.xxhash64(F.col(id_col).cast("string")), F.lit(int(n_shards))
-    ).cast("int")
-    rows = df.select(
-        shard.alias("__shard"),
-        F.col(id_col).cast("string").alias("__key"),
-        F.col(media_col).alias("__payload"),
-        *[F.col(c) for c in metas],
-    ).repartition(int(n_shards), "__shard").sortWithinPartitions(
-        "__shard", "__key"
-    )
-    ext_name = str(ext)
-    target = str(path)
-
-    def _write(it):
-        import io
-        import tarfile
-
-        from pyspark import TaskContext
-
-        attempt = TaskContext.get().taskAttemptId()
-        tf, cur, tmp = None, None, None
-
-        def _close():
-            nonlocal tf, tmp
-            if tf is not None:
-                tf.close()
-                final = tmp[: tmp.rindex(".tmp-")]
-                os.replace(tmp, final)
-                tf, tmp = None, None
-
-        def _add(name, data):
-            info = tarfile.TarInfo(name=name)
-            info.size = len(data)
-            info.mtime = 0
-            info.uid = info.gid = 0
-            info.uname = info.gname = ""
-            tf.addfile(info, io.BytesIO(data))
-
-        for r in it:
-            if r["__shard"] != cur:
-                _close()
-                cur = r["__shard"]
-                final = os.path.join(target, f"shard-{cur:05d}.tar")
-                tmp = f"{final}.tmp-{attempt}"
-                tf = tarfile.open(tmp, "w")
-            payload = bytes(r["__payload"]) if r["__payload"] is not None else b""
-            _add(f"{r['__key']}.{ext_name}", payload)
-            meta = {c: r[c] for c in metas}
-            _add(
-                f"{r['__key']}.json",
-                json.dumps(meta, sort_keys=True, default=str).encode("utf-8"),
-            )
-        _close()
-
-    rows.foreachPartition(_write)
-    # sweep .tmp-* leftovers from failed task attempts of THIS run (a
-    # retried task's successful attempt already renamed its tar live)
-    for orphan in glob.glob(os.path.join(path, "*.tmp-*")):
-        os.remove(orphan)
-    # certify by reading back tar HEADERS; manifest written last
-    import tarfile as _tarfile
-
-    shards = []
-    for tar_path in sorted(glob.glob(os.path.join(path, "shard-*.tar"))):
-        with _tarfile.open(tar_path, "r") as tf:
-            members = tf.getmembers()
-        n_bytes = os.path.getsize(tar_path)
-        shards.append({
-            "shard": os.path.basename(tar_path),
-            "n_samples": sum(1 for m in members
-                             if m.name.endswith(f".{ext_name}")),
-            "n_members": len(members),
-            "bytes": int(n_bytes),
-        })
-    manifest = {
-        "format": "webdataset",
-        "ext": ext_name,
-        "meta_cols": metas,
-        "n_shards": len(shards),
-        "total_samples": int(sum(s["n_samples"] for s in shards)),
-        "shards": shards,
-    }
-    with open(os.path.join(path, "manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=2)
-    return manifest

@@ -97,25 +97,6 @@ def normalized_fingerprint(text: Column | str) -> Column:
     return F.md5(norm)
 
 
-def sorted_token_fingerprint(text: Column | str) -> Column:
-    """Order-insensitive fingerprint: md5 of the sorted token multiset —
-    catches shuffled/reordered near-duplicates."""
-    return F.md5(F.concat_ws(" ", F.sort_array(tokens(text))))
-
-
-def rolling_hashes(text: Column | str, window: int = 8) -> Column:
-    """Winnowing-style rolling fingerprints: xxhash64 of each ``window``-token
-    span (array<long>). Downstream winnowing selects minima per stripe."""
-    toks = tokens(text)
-    spans = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - window, F.lit(0))),
-        lambda i: F.xxhash64(
-            F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(window)])
-        ),
-    )
-    return spans
-
-
 def text_profile(
     df: DataFrame,
     id_col: str,
@@ -483,44 +464,6 @@ def _read_manifest(spark, path: str, op: str) -> dict:
             "(torn write or foreign file) — treat the directory as "
             "uncertified"
         ) from e
-
-
-def read_training_shards(
-    spark,
-    path: str,
-    verify_totals: bool = True,
-) -> DataFrame:
-    """Trainer-side reader for a :func:`write_training_shards`
-    directory — the TEXT-shard sibling of :func:`read_packed_shards`:
-    refuses a manifest-less (incomplete) directory and, with
-    ``verify_totals`` (default), re-derives doc/token totals from the
-    bytes on disk against the manifest (certify-by-read-back at read
-    time). Returns the shard frame ordered for shard-by-shard
-    consumption; ``WHERE shard_id = k`` stays partition-pruned."""
-    manifest = _read_manifest(spark, path, "read_training_shards")
-    if manifest.get("file_format") == "jsonl":
-        df = spark.read.schema(
-            "id bigint, text string, n_tokens bigint, bin_id bigint, "
-            "bin_offset bigint"
-        ).json(f"{path}/data")
-    else:
-        df = spark.read.parquet(f"{path}/data")
-    if verify_totals:
-        got = df.agg(
-            F.count("*").alias("docs"),
-            F.sum("n_tokens").alias("tokens"),
-        ).collect()[0]
-        if (int(got.docs) != manifest["total_docs"]
-                or int(got.tokens) != manifest["total_tokens"]):
-            raise DVETLError(
-                "read_training_shards: on-disk totals diverge from the "
-                f"manifest (disk docs={int(got.docs)} "
-                f"tokens={int(got.tokens)} vs manifest "
-                f"docs={manifest['total_docs']} "
-                f"tokens={manifest['total_tokens']}) — the directory "
-                "was modified after certification"
-            )
-    return df
 
 
 def _write_manifest(spark, path: str, manifest: dict) -> None:
@@ -1053,8 +996,7 @@ def score_bigram_logprob(
     Scale shape: three hash joins on word keys (bigram, c(w1), c(w2))
     over the bigram stream, then one groupBy on id. Natural-language
     word frequency is maximally skewed ('the' is ~5% of English
-    tokens) — run with AQE skew-join enabled (the session default) or
-    pre-salt via ``operators.skew`` for a static plan."""
+    tokens) — run with AQE skew-join enabled (the session default)."""
     toks = _lm_tokens(text_col, bool(lm.get("lowercase", True)))
     n_total = int(lm["total_tokens"]) or 1
     base = df.select(F.col(id_col).alias("__id"), toks.alias("__t"))
@@ -1471,56 +1413,6 @@ def train_ngram_lm(
     return lm
 
 
-def save_ngram_lm(lm: dict, path: str) -> None:
-    """Persist a :func:`train_ngram_lm` model: ``{path}/ngrams/{k}``
-    parquet per order plus a one-row ``{path}/params`` written LAST —
-    its presence marks the model complete (the save_bpe / save_unigram
-    completeness-marker convention). The CCNet workflow this serves:
-    train the reference LM once, then score every future corpus against
-    the stored counts without re-reading the training data."""
-    from mallarddv_spark.functions.litframe import literal_frame
-
-    grams = lm.get("ngrams")
-    if not grams:
-        raise DVConfigurationError(
-            "save_ngram_lm: model lacks ngram tables — train with "
-            "train_ngram_lm"
-        )
-    spark = grams[1].sparkSession
-    for k, t in grams.items():
-        t.write.mode("overwrite").parquet(f"{path}/ngrams/{int(k)}")
-    literal_frame(
-        spark,
-        [(int(lm["order"]), int(lm["total_tokens"]),
-          bool(lm.get("lowercase", True)))],
-        "order int, total_tokens bigint, lowercase boolean",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
-
-
-def load_ngram_lm(spark, path: str) -> dict:
-    """Load a model persisted by :func:`save_ngram_lm` — lazily: each
-    order's count table is a parquet scan, so scoring reads only the
-    statistics it joins (the stored model can be far larger than
-    memory). A missing ``params`` directory (torn save) fails loudly
-    here rather than silently scoring under default settings."""
-    p = spark.read.parquet(f"{path}/params").first()
-    n = int(p.order)
-    ngrams = {
-        k: spark.read.parquet(f"{path}/ngrams/{k}") for k in range(1, n + 1)
-    }
-    lm: dict = {
-        "ngrams": ngrams,
-        "order": n,
-        "total_tokens": int(p.total_tokens),
-        "lowercase": bool(p.lowercase),
-        "unigrams": ngrams[1].withColumnRenamed("w1", "w"),
-        "bigrams": ngrams[2],
-    }
-    if n >= 3:
-        lm["trigrams"] = ngrams[3]
-    return lm
-
-
 _SCRIPT_CLASSES = (
     # (name, Java regex class, RE2 class — the oracle mirror's syntax).
     # Doubled backslashes: these land inside SQL string LITERALS, which
@@ -1594,127 +1486,6 @@ def script_profile(
             + " ELSE 'other' END"
         ).alias("dominant_script"),
     )
-
-
-def split_sentences(text: Column | str) -> Column:
-    """Sentence segmentation as ONE regex split — ``array<string>`` of
-    sentences: boundaries are ``. ! ?`` runs followed by whitespace and
-    an upper-case/digit/quote opener (the lookaround keeps the
-    terminator WITH its sentence). The chunking tier splits on token
-    windows regardless of meaning; this gives the sentence-aware
-    alternative for boundary-respecting packing and per-sentence
-    quality signals.
-
-    Heuristic by design, like every regex segmenter: abbreviations
-    ("Dr. Smith") and decimal points inside numbers are handled (no
-    split without following whitespace + opener; single-letter
-    initials like "J. K." stay glued only when the next char is not an
-    opener — documented residual: "Mr. Smith" DOES split, a lexicon
-    job, not a regex job). Empty/whitespace-only text yields an empty
-    array."""
-    s = F.col(text) if isinstance(text, str) else text
-    # two bounded lookbehind branches: terminator directly before the
-    # whitespace, or terminator + one closing quote/bracket
-    parts = F.split(
-        F.trim(s),
-        r"(?:(?<=[.!?][\"')\]])|(?<=[.!?]))\s+(?=[\"'A-Z0-9(])",
-    )
-    return F.filter(parts, lambda x: F.trim(x) != "")
-
-
-def packing_plan_report(
-    df: DataFrame,
-    ids_col: str | None = None,
-    length_col: str | None = None,
-    token_budget: int = 2048,
-    fold_ops_per_shard: int = 1_000_000,
-) -> dict:
-    """Pre-pack sizing audit — operationalizes :func:`pack_bins_ffd`'s
-    documented ``docs × bins ≲ 10⁶`` per-shard rule BEFORE paying for a
-    pack of the full corpus: one aggregate-only pass over the lengths
-    (``size(ids_col)`` or a precomputed ``length_col``) returns
-
-    * ``docs`` / ``tokens`` / length quantiles (p50/p90/p99/max,
-      ``percentile_approx``) / ``mean_len``,
-    * ``oversize`` — documents longer than the budget (each will take a
-      bin of its own; truncate or re-chunk them upstream),
-    * ``min_bins`` — the ⌈Σ tokens / budget⌉ packing lower bound, and
-      ``min_padding_frac`` — the padding even a perfect pack cannot
-      beat, given the oversize docs' dedicated bins,
-    * ``recommended_n_shards`` — the smallest shard count keeping the
-      per-shard FFD fold inside ``fold_ops_per_shard`` first-fit
-      lambda evaluations (docs/shard × bins/shard, bins estimated from
-      the mean-length fill rate), clamped to ≥ 1. Feed it straight to
-      :func:`pack_bins_ffd` / :func:`write_packed_shards`.
-
-    The report is driver-side metadata (one row); the corpus is
-    scanned once and never collected."""
-    if int(token_budget) < 1:
-        raise DVConfigurationError(
-            "packing_plan_report: token_budget must be >= 1"
-        )
-    if (ids_col is None) == (length_col is None):
-        raise DVConfigurationError(
-            "packing_plan_report: pass exactly one of ids_col or "
-            "length_col"
-        )
-    b = int(token_budget)
-    ln = (F.size(ids_col) if ids_col is not None
-          else F.col(length_col)).cast("bigint")
-    r = df.select(ln.alias("__l")).agg(
-        F.count("*").alias("docs"),
-        F.sum("__l").alias("tokens"),
-        F.expr("percentile_approx(__l, array(0.5, 0.9, 0.99), 10000)")
-        .alias("q"),
-        F.max("__l").alias("max_len"),
-        F.sum((F.col("__l") > b).cast("long")).alias("oversize"),
-        F.sum(F.when(F.col("__l") > b, F.col("__l"))).alias("over_toks"),
-        F.sum(F.col("__l").isNull().cast("long")).alias("nulls"),
-    ).collect()[0]
-    docs, tokens = int(r.docs), int(r.tokens or 0)
-    null_docs = int(r.nulls or 0)
-    oversize = int(r.oversize or 0)
-    over_toks = int(r.over_toks or 0)
-    # packing lower bound: every oversize doc takes its own bin; the
-    # rest cannot beat ceil(tokens / budget)
-    rest_bins = -(-(tokens - over_toks) // b) if tokens > over_toks else 0
-    min_bins = oversize + rest_bins
-    mean_len = (tokens / docs) if docs else 0.0
-    # expected bins per doc ≈ mean_len / budget (fill-rate estimate);
-    # fold ops per shard ≈ (docs/n) × (bins/n) = docs² × mean_len /
-    # (budget × n²)  →  n ≥ sqrt(docs² × mean_len / (budget × cap))
-    import math
-
-    n_rec = 1
-    if docs and mean_len:
-        n_rec = max(1, math.ceil(math.sqrt(
-            docs * docs * mean_len / (b * float(fold_ops_per_shard))
-        )))
-    return {
-        "docs": docs,
-        # docs whose length is NULL (a NULL ids array — unresolved
-        # unknown tokens): they contribute to `docs` but to no other
-        # stat, and write_packed_shards will REJECT the corpus until
-        # they are fixed — surfaced here so the audit says so first
-        "null_length_docs": null_docs,
-        "tokens": tokens,
-        "token_budget": b,
-        "len_p50": int(r.q[0]) if r.q else 0,
-        "len_p90": int(r.q[1]) if r.q else 0,
-        "len_p99": int(r.q[2]) if r.q else 0,
-        "max_len": int(r.max_len or 0),
-        "mean_len": round(mean_len, 2),
-        "oversize": oversize,
-        "min_bins": int(min_bins),
-        # capacity of an oversize bin is its own doc's length (it holds
-        # MORE than the budget), so the unbeatable-padding bound
-        # measures against rest_bins × budget + oversize tokens
-        "min_padding_frac": round(
-            1.0 - tokens / (rest_bins * b + over_toks), 6
-        ) if (rest_bins or over_toks) else 0.0,
-        "recommended_n_shards": int(n_rec),
-        "fold_ops_per_shard": int(fold_ops_per_shard),
-    }
 
 
 def token_id_histogram(
@@ -1897,71 +1668,6 @@ def pack_bins_ffd(
             (F.col("n_tokens") > F.lit(b)).alias("oversize"),
         )
     )
-
-
-def prune_ngram_lm(lm: dict, thresholds: dict[int, int]) -> dict:
-    """KenLM-style count-threshold pruning of a :func:`train_ngram_lm`
-    model: drop every order-``k`` n-gram whose count is below
-    ``thresholds[k]`` (KenLM's ``--prune`` — the pruning the shipped
-    CCNet LMs actually use; SRILM's Stolcke entropy pruning is a
-    deliberate non-goal here, because it operates on a FROZEN ARPA
-    backoff model with stored backoff weights, while this model keeps
-    raw counts and smooths at score time).
-
-    Thresholds must be non-decreasing with order and order 1 must stay
-    unpruned (both KenLM's own rules). Non-decreasing thresholds make
-    the pruned model CLOSED: every kept k-gram's (k−1)-gram prefix and
-    suffix each occur at least as often as the k-gram itself, so they
-    survive their own (lower) bar — no kept n-gram ever dangles
-    (pytest-pinned). Scoring a pruned model needs nothing special:
-    :func:`score_kn_ngram_logprob` derives every continuation/type
-    statistic from the stored tables at score time, so the smoothing
-    self-consistently reflects the pruned counts, and pruned n-grams
-    fall through the normal unseen-context path.
-
-    Returns a NEW model dict sharing the unpruned orders' tables;
-    ``total_tokens`` is unchanged (order 1 is never pruned). Pruning
-    is one filter per order — no shuffle, fully pushed to the scan
-    when the model is loaded from parquet."""
-    grams = lm.get("ngrams")
-    if not grams:
-        raise DVConfigurationError(
-            "prune_ngram_lm: model lacks ngram tables — train with "
-            "train_ngram_lm"
-        )
-    n = int(lm["order"])
-    thr = {int(k): int(v) for k, v in thresholds.items()}
-    if any(k < 1 or k > n for k in thr):
-        raise DVConfigurationError(
-            f"prune_ngram_lm: threshold orders must be in [1, {n}]"
-        )
-    if thr.get(1, 1) > 1:
-        raise DVConfigurationError(
-            "prune_ngram_lm: order 1 must stay unpruned (threshold <= 1)"
-        )
-    prev = 1
-    for k in range(2, n + 1):
-        cur = thr.get(k, prev)
-        if cur < prev:
-            raise DVConfigurationError(
-                "prune_ngram_lm: thresholds must be non-decreasing "
-                f"with order (order {k}: {cur} < {prev})"
-            )
-        thr[k] = cur
-        prev = cur
-    ngrams = {
-        k: (
-            t.filter(F.col("cnt") >= thr[k]) if thr.get(k, 1) > 1 else t
-        )
-        for k, t in grams.items()
-    }
-    out: dict = dict(lm)
-    out["ngrams"] = ngrams
-    out["unigrams"] = ngrams[1].withColumnRenamed("w1", "w")
-    out["bigrams"] = ngrams[2]
-    if n >= 3:
-        out["trigrams"] = ngrams[3]
-    return out
 
 
 def score_kn_ngram_logprob(
@@ -2147,405 +1853,6 @@ def score_kn_ngram_logprob(
         F.round(
             F.sum("__lp10") / (F.lit(1e10) * F.count("*")), 6
         ).alias("avg_logprob"),
-    )
-
-
-def export_arpa(
-    lm: dict, discount: float = 0.75, order: int | None = None
-) -> DataFrame:
-    """Materialize a :func:`train_ngram_lm` model as ARPA backoff
-    entries — ``(k, gram, log10p, log10bow)`` — the KenLM/SRILM interop
-    surface (CCNet ships its reference LMs as KenLM binaries built from
-    exactly this format).
-
-    The interpolated-KN recursion :func:`score_kn_ngram_logprob`
-    evaluates IS a backoff model, and this export is its closed form:
-    each stored k-gram's entry carries the scorer's own level-k
-    probability, and each k-gram's backoff weight is the level-(k+1)
-    interpolation weight λ with that gram as context — raw-count
-    ``D·max(N1+(g·),1)/c(g)`` at the top context level, continuation
-    ``D·nfm/nmid`` below, NULL (≡ bow 1, omitted in ARPA text) where
-    the gram never appears mid-position. A standard ARPA backoff
-    evaluator over these entries reproduces the scorer EXACTLY on every
-    query class — seen grams, unseen-gram/seen-context backoff at every
-    level, unseen contexts, OOV words (the ``<unk>`` entry carries the
-    scorer's 0.5-type floor) — pytest-pinned by a pure-Python ARPA
-    evaluator differential.
-
-    Scale shape: one pass of groupBy statistics per level over the
-    stored type tables (the scorer's own exchanges) + one suffix join
-    per level against the level below — entries stream out
-    model-sized, never corpus-sized. Serialize with
-    :func:`write_arpa_text` (driver-streamed text — the format is
-    inherently one ordered file) or keep the parquet form for lakes."""
-    grams = lm.get("ngrams")
-    if not grams:
-        raise DVConfigurationError(
-            "export_arpa: model lacks ngram tables — train with "
-            "train_ngram_lm"
-        )
-    n = int(order if order is not None else lm["order"])
-    if n < 2 or n > int(lm["order"]):
-        raise DVConfigurationError(
-            f"export_arpa: order must be in [2, {lm['order']}]"
-        )
-    if not 0.0 < float(discount) < 1.0:
-        raise DVConfigurationError("export_arpa: discount must be in (0, 1)")
-    d = float(discount)
-    t_bitypes = int(grams[2].count()) or 1
-
-    def cols(k):
-        return [f"w{i + 1}" for i in range(k)]
-
-    # --- probabilities, bottom-up ---------------------------------
-    nbb = grams[2].groupBy("w2").agg(F.count("*").alias("__nb"))
-    levels = {
-        1: grams[1]
-        .join(nbb, grams[1]["w1"] == nbb["w2"], "left")
-        .select(
-            grams[1]["w1"],
-            (
-                F.coalesce(F.col("__nb").cast("double"), F.lit(0.5))
-                / F.lit(float(t_bitypes))
-            ).alias("__p"),
-        )
-    }
-    for k in range(2, n):
-        tt = grams[k + 1]
-        ncb = tt.groupBy(*[f"w{i + 2}" for i in range(k)]).agg(
-            F.count("*").alias("__ncb")
-        ).select(
-            *[F.col(f"w{i + 2}").alias(f"__u{i + 1}") for i in range(k)],
-            "__ncb",
-        )
-        mid = tt.groupBy(*[f"w{i + 2}" for i in range(k - 1)]).agg(
-            F.count("*").alias("__nmid"),
-            F.countDistinct(f"w{k + 1}").alias("__nfm"),
-        ).select(
-            *[F.col(f"w{i + 2}").alias(f"__m{i + 1}") for i in range(k - 1)],
-            "__nmid", "__nfm",
-        )
-        lower = levels[k - 1].select(
-            *[F.col(f"w{i + 1}").alias(f"__l{i + 1}") for i in range(k - 1)],
-            F.col("__p").alias("__lp"),
-        )
-        base = grams[k].join(ncb, [
-            grams[k][f"w{j + 1}"] == ncb[f"__u{j + 1}"] for j in range(k)
-        ], "left")
-        base = base.join(mid, [
-            F.col(f"w{j + 1}") == F.col(f"__m{j + 1}") for j in range(k - 1)
-        ], "left").join(lower, [
-            F.col(f"w{j + 2}") == F.col(f"__l{j + 1}") for j in range(k - 1)
-        ])
-        levels[k] = base.select(
-            *cols(k),
-            F.when(
-                F.col("__nmid").isNotNull(),
-                F.greatest(
-                    F.coalesce(F.col("__ncb").cast("double"), F.lit(0.0))
-                    - F.lit(d),
-                    F.lit(0.0),
-                ) / F.col("__nmid").cast("double")
-                + (
-                    F.lit(d) * F.col("__nfm").cast("double")
-                    / F.col("__nmid").cast("double")
-                ) * F.col("__lp"),
-            ).otherwise(F.col("__lp")).alias("__p"),
-        )
-    # top level: raw counts
-    ctx = grams[n - 1].select(
-        *[F.col(f"w{i + 1}").alias(f"__x{i + 1}") for i in range(n - 1)],
-        F.col("cnt").alias("__cctx"),
-    )
-    nf_top = grams[n].groupBy(*cols(n - 1)).agg(
-        F.count("*").alias("__nf")
-    ).select(
-        *[F.col(f"w{i + 1}").alias(f"__h{i + 1}") for i in range(n - 1)],
-        "__nf",
-    )
-    lower = levels[n - 1].select(
-        *[F.col(f"w{i + 1}").alias(f"__l{i + 1}") for i in range(n - 1)],
-        F.col("__p").alias("__lp"),
-    )
-    levels[n] = (
-        grams[n]
-        .join(ctx, [
-            F.col(f"w{j + 1}") == F.col(f"__x{j + 1}") for j in range(n - 1)
-        ])
-        .join(nf_top, [
-            F.col(f"w{j + 1}") == F.col(f"__h{j + 1}") for j in range(n - 1)
-        ])
-        .join(lower, [
-            F.col(f"w{j + 2}") == F.col(f"__l{j + 1}") for j in range(n - 1)
-        ])
-        .select(
-            *cols(n),
-            (
-                F.greatest(
-                    F.col("cnt").cast("double") - F.lit(d), F.lit(0.0)
-                ) / F.col("__cctx").cast("double")
-                + (
-                    F.lit(d)
-                    * F.greatest(F.col("__nf"), F.lit(1)).cast("double")
-                    / F.col("__cctx").cast("double")
-                ) * F.col("__lp")
-            ).alias("__p"),
-        )
-    )
-    # --- backoff weights per entry level j < n --------------------
-    bows = {}
-    for j in range(1, n):
-        if j == n - 1:
-            b = grams[j].join(nf_top, [
-                F.col(f"w{i + 1}") == F.col(f"__h{i + 1}") for i in range(j)
-            ], "left").select(
-                *cols(j),
-                (
-                    F.lit(d)
-                    * F.greatest(F.coalesce(F.col("__nf"), F.lit(0)),
-                                 F.lit(1)).cast("double")
-                    / F.col("cnt").cast("double")
-                ).alias("__bow"),
-            )
-        else:
-            tt = grams[j + 2]
-            mid = tt.groupBy(*[f"w{i + 2}" for i in range(j)]).agg(
-                F.count("*").alias("__nmid"),
-                F.countDistinct(f"w{j + 2}").alias("__nfm"),
-            ).select(
-                *[F.col(f"w{i + 2}").alias(f"__m{i + 1}") for i in range(j)],
-                "__nmid", "__nfm",
-            )
-            b = grams[j].join(mid, [
-                F.col(f"w{i + 1}") == F.col(f"__m{i + 1}") for i in range(j)
-            ], "left").select(
-                *cols(j),
-                F.when(
-                    F.col("__nmid").isNotNull(),
-                    F.lit(d) * F.col("__nfm").cast("double")
-                    / F.col("__nmid").cast("double"),
-                ).alias("__bow"),
-            )
-        bows[j] = b
-    # --- assemble (k, gram, log10p, log10bow) ---------------------
-    spark = grams[1].sparkSession
-    out = None
-    for k in range(1, n + 1):
-        e = levels[k]
-        if k < n:
-            e = e.join(bows[k], cols(k), "left")
-        else:
-            e = e.withColumn("__bow", F.lit(None).cast("double"))
-        part = e.select(
-            F.lit(k).alias("k"),
-            F.concat_ws(" ", *cols(k)).alias("gram"),
-            F.log10("__p").alias("log10p"),
-            F.log10("__bow").alias("log10bow"),
-        )
-        out = part if out is None else out.unionByName(part)
-    from mallarddv_spark.functions.litframe import literal_frame
-
-    unk = literal_frame(
-        spark,
-        [(1, "<unk>", float(__import__("math").log10(0.5 / t_bitypes)),
-          None)],
-        "k int, gram string, log10p double, log10bow double",
-    )
-    return out.unionByName(unk)
-
-
-def write_arpa_text(entries: DataFrame, path: str) -> None:
-    """Serialize :func:`export_arpa` entries as an ARPA text file —
-    driver-streamed (the format is ONE ordered text file by
-    definition; for models past driver memory keep the parquet form
-    and feed KenLM's ``lmplz``-side tooling from it). Probabilities
-    print at 7 dp, the SRILM convention."""
-    import os as _os
-
-    counts = {
-        r.k: r.c
-        for r in entries.groupBy("k").agg(F.count("*").alias("c")).collect()
-    }
-    n = max(counts)
-    _os.makedirs(_os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("\\data\\\n")
-        for k in range(1, n + 1):
-            f.write(f"ngram {k}={counts.get(k, 0)}\n")
-        for k in range(1, n + 1):
-            f.write(f"\n\\{k}-grams:\n")
-            it = (
-                entries.filter(F.col("k") == k)
-                .orderBy("gram")
-                .toLocalIterator()
-            )
-            for r in it:
-                if r.log10bow is None:
-                    f.write(f"{r.log10p:.7f}\t{r.gram}\n")
-                else:
-                    f.write(f"{r.log10p:.7f}\t{r.gram}\t{r.log10bow:.7f}\n")
-        f.write("\n\\end\\\n")
-
-
-def load_arpa(spark, path: str) -> DataFrame:
-    """Parse an ARPA file (KenLM/SRILM text format) into the
-    ``(k, gram, log10p, log10bow)`` entry frame :func:`export_arpa`
-    produces — the import half of the interop loop: score a corpus
-    under an EXTERNAL reference LM (the actual CCNet workflow —
-    download a published KenLM model, score every crawl snapshot
-    against it) without retraining.
-
-    Entry lines are self-describing (``log10p<TAB>gram[<TAB>bow]`` —
-    the level is the gram's word count), so the parse is a
-    distributed ``spark.read.text`` + one projection — no section
-    state, order-independent, works on a multi-gigabyte ARPA."""
-    lines = spark.read.text(path)
-    e = lines.filter(
-        F.col("value").rlike(r"^-?[0-9]+(\.[0-9]+)?\t")
-    ).select(F.split("value", "\t").alias("f"))
-    return e.select(
-        F.size(F.split(F.expr("element_at(f, 2)"), " ")).alias("k"),
-        F.expr("element_at(f, 2)").alias("gram"),
-        F.expr("element_at(f, 1)").cast("double").alias("log10p"),
-        F.expr("try_element_at(f, 3)").cast("double").alias("log10bow"),
-    )
-
-
-def score_arpa_logprob(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    entries: DataFrame,
-    order: int | None = None,
-    lowercase: bool = True,
-) -> DataFrame:
-    """Per-document mean n-gram log-probability under a STORED ARPA
-    backoff model (:func:`load_arpa` / :func:`export_arpa` entries) —
-    the standard backoff evaluation: use the stored probability when
-    the k-gram is present, otherwise back off through
-    ``bow(context) + P(suffix)`` level by level (log10 domain), with
-    the ``<unk>`` entry flooring OOV words. On entries exported from
-    a :func:`train_ngram_lm` model AT THE SAME TOP ORDER this
-    reproduces :func:`score_kn_ngram_logprob` (pytest-pinned to the
-    text file's 7 dp); on an external KenLM ARPA it reproduces KenLM.
-    Query a file at its own order (KenLM's rule too): a 4-gram file's
-    level-3 entries are middle-level continuation probabilities, not
-    an order-3 top level, so ``order`` below the file's maximum
-    answers a different (still well-defined) backoff model.
-
-    Returns ``(id, n_ngrams, n_oov, avg_logprob)`` (natural log, the
-    scorer convention; ``n_oov`` counts unigram misses). Docs with
-    fewer than ``order`` tokens score no row.
-
-    Scale shape: one prob join per level + one bow join per
-    context level — ``2·order − 1`` hash joins against model-sized
-    tables (AQE broadcasts them when they fit), one groupBy on id.
-    Same 1e-10 grid sum discipline as the KN scorer."""
-    orders = [r.k for r in entries.select("k").distinct().collect()]
-    if not orders:
-        raise DVConfigurationError("score_arpa_logprob: empty entries")
-    n = int(order if order is not None else max(orders))
-    if n < 2 or n > max(orders):
-        raise DVConfigurationError(
-            f"score_arpa_logprob: order must be in [2, {max(orders)}]"
-        )
-    unk_row = entries.filter(
-        (F.col("k") == 1) & (F.col("gram") == "<unk>")
-    ).select("log10p").first()
-    unk = float(unk_row.log10p) if unk_row else -99.0
-    toks = _lm_tokens(text_col, lowercase)
-    base = df.select(F.col(id_col).alias("__id"), toks.alias("__t"))
-    fields = ", ".join(
-        f"element_at(__t, i + {j}) as w{j + 1}" for j in range(n)
-    )
-    tuples = F.when(
-        F.size("__t") >= n,
-        F.expr(
-            f"transform(sequence(1, size(__t) - {n - 1}), "
-            f"i -> struct({fields}))"
-        ),
-    ).otherwise(F.expr("array()"))
-    stream = base.select("__id", F.explode(tuples).alias("p")).select(
-        "__id", *[F.col(f"p.w{i + 1}").alias(f"w{i + 1}") for i in range(n)]
-    )
-    # suffix gram strings: level-k prob key ends at position n; level-j
-    # bow key ends at position n-1
-    for k in range(1, n + 1):
-        stream = stream.withColumn(
-            f"__s{k}",
-            F.concat_ws(" ", *[f"w{i + 1}" for i in range(n - k, n)]),
-        )
-    for j in range(1, n):
-        stream = stream.withColumn(
-            f"__c{j}",
-            F.concat_ws(
-                " ", *[f"w{i + 1}" for i in range(n - 1 - j, n - 1)]
-            ),
-        )
-    scored = stream
-    for k in range(1, n + 1):
-        pk = entries.filter(F.col("k") == k).select(
-            F.col("gram").alias(f"__pg{k}"), F.col("log10p").alias(f"__p{k}")
-        )
-        scored = scored.join(
-            pk, F.col(f"__s{k}") == F.col(f"__pg{k}"), "left"
-        )
-    for j in range(1, n):
-        bj = entries.filter(
-            (F.col("k") == j) & F.col("log10bow").isNotNull()
-        ).select(
-            F.col("gram").alias(f"__bg{j}"), F.col("log10bow").alias(f"__b{j}")
-        )
-        scored = scored.join(
-            bj, F.col(f"__c{j}") == F.col(f"__bg{j}"), "left"
-        )
-    # backoff chain, innermost out (log10 domain)
-    lp = f"coalesce(__p1, cast({unk!r} as double))"
-    for k in range(2, n + 1):
-        lp = (
-            f"CASE WHEN __p{k} IS NOT NULL THEN __p{k} "
-            f"ELSE coalesce(__b{k - 1}, cast(0.0 as double)) + ({lp}) END"
-        )
-    ln10 = "2.302585092994046"
-    scored = scored.select(
-        "__id",
-        F.col("__p1").isNull().cast("int").alias("__oov"),
-        F.round(F.expr(f"({lp}) * {ln10}") * 1e10).cast("bigint").alias(
-            "__lp10"
-        ),
-    )
-    return scored.groupBy(F.col("__id").alias("id")).agg(
-        F.count("*").alias("n_ngrams"),
-        F.sum("__oov").cast("bigint").alias("n_oov"),
-        F.round(
-            F.sum("__lp10") / (F.lit(1e10) * F.count("*")), 6
-        ).alias("avg_logprob"),
-    )
-
-
-def fluency_filter(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    lm: dict,
-    min_avg_logprob: float,
-    alpha: float = 0.4,
-) -> DataFrame:
-    """Keep/drop verdict from :func:`score_bigram_logprob`: flags
-    documents whose mean bigram log-prob falls below
-    ``min_avg_logprob`` (disfluent under the reference LM). Returns the
-    input plus ``(avg_logprob, fluency_keep)``; short docs (< 2 tokens,
-    NULL score) are KEPT — no evidence is not negative evidence."""
-    scores = score_bigram_logprob(df, id_col, text_col, lm, alpha).select(
-        F.col("id").alias(id_col), "avg_logprob"
-    )
-    return df.join(scores, on=id_col, how="left").select(
-        *df.columns,
-        "avg_logprob",
-        (
-            F.col("avg_logprob").isNull()
-            | (F.col("avg_logprob") >= float(min_avg_logprob))
-        ).alias("fluency_keep"),
     )
 
 

@@ -219,7 +219,16 @@ class MetadataCache:
         return [t for t in self._transitions if t.source_table == source_table]
 
     def has_staging_definition(self, base_name: str) -> bool:
-        """Cache-backed :func:`mallarddv_spark.flow.runinfo.check_source_for_ingestion`."""
+        """True if ``base_name`` should be loaded from file — i.e. it has a
+        ``rel_type='stg'`` definition in ``metadata.tables``.
+
+        Implements the *documented intent* ("True if the source_table
+        should be loaded from file", reference
+        ``metadata_manager.py:203-210``). The reference's actual SQL
+        (``ORDER BY 1 ASC LIMIT 1`` over ``rel_type='stg'`` booleans,
+        ``db/sql_templates.py:77-84``) returns False whenever the base name
+        also has non-stg rows, silently skipping the demo's file load — a
+        verified latent defect we deliberately do not reproduce."""
         return bool(self.table_columns(base_name=base_name, rel_type="stg"))
 
 

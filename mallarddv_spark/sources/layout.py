@@ -4,47 +4,13 @@ The load protocol's joins are all keyed on cryptographic hash keys, so the
 one physical decision that matters at 100 TB is: **co-locate the big table
 on its hash key**. Spark bucketing (`bucketBy` on saveAsTable) persists the
 hash-partitioning; a join or anti-join against a table bucketed on the join
-key skips the Exchange on that side entirely (verified by
-``tests/test_layout.py`` asserting the plan has no shuffle on the bucketed
-side). On Delta/Iceberg the analogous tools are liquid clustering /
-partition transforms; the protocol is unchanged.
-
-Guidance encoded here:
-* hubs/links: bucket by the hash key — uniform by construction, so every
-  bucket is the same size (no skew, ever);
-* satellites: bucket by parent hash key (windows and joins both key on it),
-  optionally partition by date(load_dts) for retention pruning;
-* bucket counts: ~ total_size / 128 MB, rounded to a power of two.
+key skips the Exchange on that side entirely. Compaction keeps a table's
+bucket spec (``bucket_spec``) so a rewrite never silently de-buckets it. On
+Delta/Iceberg the analogous tools are liquid clustering / partition
+transforms; the protocol is unchanged.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_fqn: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a managed table bucketed (and optionally sorted)
-    by ``bucket_col`` — joins on that column then read pre-partitioned."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_fqn)
-
-
-def suggest_buckets(total_bytes: int, target_bytes: int = 128 << 20) -> int:
-    """Power-of-two bucket count targeting ~128 MB per bucket."""
-    n = max(1, total_bytes // target_bytes)
-    p = 1
-    while p < n:
-        p <<= 1
-    return p
 
 
 def table_location(spark, table_fqn: str) -> str:

@@ -4,14 +4,13 @@ The reference is strictly batch (SURVEY §2.8); this module is the scale
 extension that makes the vault continuously loaded:
 
 * :func:`stream_files_to_staging` — file-source stream with the imposed
-  metadata schema; each micro-batch runs the standard hub/link/sat load
-  protocol via ``foreachBatch`` (the anti-join loads are already
-  idempotent, which is exactly what at-least-once micro-batches need —
-  replays insert nothing).
-* :func:`windowed_event_aggregate` — watermarked tumbling-window
-  aggregation over an event stream (late data handled by the watermark);
-  its batch twin is ``suite.q_events_hourly_agg``, which the driver's
-  oracle verifies.
+  metadata schema; each micro-batch goes to the caller's
+  ``process_batch`` via ``foreachBatch`` (a vault flow there is safe:
+  the anti-join loads are idempotent, which is exactly what
+  at-least-once micro-batches need — replays insert nothing).
+* :func:`neardup_stream_processor` — the curation crawl gate: in-batch
+  dedup, MinHash index probe and append, plus optional gates and
+  sidecar stores.
 
 Tests run with ``trigger(availableNow=True)`` on temp dirs; on a cluster
 the same code points at cloud storage / Kafka with a real checkpoint
@@ -20,10 +19,13 @@ location.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 from mallarddv_spark.exceptions import DVConfigurationError
+from mallarddv_spark.logging_utils import get_logger
+
+log = get_logger("streaming")
 
 
 def _refresh_after_batch_write(
@@ -48,8 +50,9 @@ def _refresh_after_batch_write(
         if s is not None:
             try:
                 s.catalog.refreshTable(table)
-            except Exception:
-                pass  # table may not exist yet in that session's catalog
+            except Exception:  # table may not exist yet in that catalog
+                log.debug("refresh of %s after batch write skipped", table,
+                          exc_info=True)
 
 
 def stream_files_to_staging(
@@ -86,126 +89,6 @@ def stream_files_to_staging(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def windowed_event_aggregate(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window aggregate over a streaming DataFrame.
-
-    Returns (window_start, window_end, key, n_events, sum_value). Works on
-    batch DataFrames too (same code path — that twin is oracle-checked).
-    """
-    from mallarddv_spark.streaming.event_time import ensure_event_time
-
-    src = ensure_event_time(events, ts_col)
-    if events.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(F.window(ts_col, window_duration).alias("w"), F.col(key_col))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(value_col), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            F.col(key_col),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def stream_events_to_console_demo(
-    spark: SparkSession, events_dir: str, checkpoint_dir: str, schema: StructType
-) -> StreamingQuery:
-    """Minimal end-to-end streaming pipeline wiring (file source → windowed
-    agg → memory sink), used by tests; swap sink for Kafka/Delta in prod."""
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    agg = windowed_event_aggregate(stream)
-    return (
-        agg.writeStream.format("memory")
-        .queryName("windowed_events")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def vault_stream_processor(
-    vault,
-    source_table: str,
-    record_source: str,
-    expectations: list | None = None,
-    quarantine_table: str | None = None,
-    load_date_overwrite: str | None = None,
-):
-    """Ready-made ``process_batch`` for :func:`stream_files_to_staging`:
-    each micro-batch overwrites staging and runs the full vault flow —
-    including the data-contract gate (abort) or dead-letter quarantine,
-    exactly as in batch mode. The anti-join load protocol absorbs
-    micro-batch replays idempotently; a contract violation in abort mode
-    raises, which fails the streaming query rather than silently dropping
-    the batch (at-least-once semantics preserved — fix the data or switch
-    to ``quarantine_table`` and restart from the checkpoint).
-    """
-
-    def process(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").insertInto(
-            f"{vault.stg_db}.{source_table}", overwrite=True
-        )
-        # the overwrite ran on foreachBatch's CLONED session; the vault
-        # facade reads staging through ITS session — refresh there or
-        # execute_flow can resolve the previous batch's (deleted) files
-        _refresh_after_batch_write(
-            batch_df.sparkSession, f"{vault.stg_db}.{source_table}",
-            extra_sessions=(vault.spark,),
-        )
-        errs = vault.execute_flow(
-            source_table,
-            record_source,
-            load_date_overwrite=load_date_overwrite,
-            expectations=expectations,
-            quarantine_table=quarantine_table,
-        )
-        if errs:
-            raise RuntimeError(
-                f"vault stream batch {batch_id} failed: {errs}"
-            )
-
-    return process
-
-
-def dedup_stream(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Streaming deduplication: drop rows whose ``key_cols`` were already
-    seen within the watermark horizon (``dropDuplicatesWithinWatermark``).
-
-    This is the at-least-once → effectively-once repair step for sources
-    that replay (Kafka redeliveries, file re-drops): dedup state is bounded
-    by the watermark, so it runs forever on unbounded streams. Works on
-    batch frames too (plain dropDuplicates on the keys).
-    """
-    from mallarddv_spark.streaming.event_time import ensure_event_time
-
-    if not events.isStreaming:
-        return events.dropDuplicates(key_cols)
-    return (
-        ensure_event_time(events, ts_col)
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(key_cols)
-    )
 
 
 def neardup_stream_processor(
@@ -412,7 +295,8 @@ def neardup_stream_processor(
         # would wedge the stream after a crashed compact: every restart
         # fails on the missing path before reaching the heal)
         p = dedup._minhash_index_params(spark, index_path)
-        # replay fence: ids the index already holds were fully processed
+        # replay fence: ids in sigs (the index's LAST append) were fully
+        # processed
         seen = spark.read.parquet(f"{index_path}/sigs").select(
             F.col("doc_id").alias(id_col)
         )

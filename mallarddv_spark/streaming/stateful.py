@@ -1,8 +1,8 @@
 """Custom stateful streaming operators via ``applyInPandasWithState``.
 
 Structured Streaming's built-in aggregations cover windowed counts; custom
-per-key state machines (running profiles, session carriers, dedup caches)
-need the arbitrary-state API. The pattern here — Arrow-batched pandas
+per-key state machines (session carriers, dedup caches) need the
+arbitrary-state API. The pattern here — Arrow-batched pandas
 per key-group, explicit GroupState handle, update-mode output — is the
 production shape; swap the state transition function for any per-key logic.
 
@@ -23,60 +23,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("total_events", LongType()),
-        StructField("total_purchases", LongType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("total_events", LongType()),
-        StructField("total_purchases", LongType()),
-    ]
-)
-
-
-def _update_user_profile(
-    key, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Accumulate a running per-user profile across micro-batches."""
-    (user_id,) = key
-    total, purchases = state.get if state.exists else (0, 0)
-    last_ts = None
-    for pdf in batches:
-        total += len(pdf)
-        purchases += int((pdf["event_type"] == "purchase").sum())
-        mx = pdf["ts"].max()
-        last_ts = mx if last_ts is None else max(last_ts, mx)
-    state.update((total, purchases))
-    yield pd.DataFrame(
-        [
-            {
-                "user_id": user_id,
-                "total_events": total,
-                "total_purchases": purchases,
-                "last_ts": last_ts,
-            }
-        ]
-    )
-
-
-def running_user_profile(events: DataFrame) -> DataFrame:
-    """Streaming per-user running profile: event/purchase totals carried in
-    group state across micro-batches (emitted in update mode every batch)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_user_profile,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 SESSION_OUTPUT = StructType(
     [
@@ -158,79 +104,5 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
             stateStructType=SESSION_STATE,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _sessionize_with_timeout(key, batches: Iterator[pd.DataFrame], state: GroupState):
-    """Timeout-flushing variant: same session algebra as :func:`_sessionize`,
-    plus — when the event-time watermark passes (last_event + gap) with no
-    new events for the key — the open session is emitted and state cleared.
-    This is how idle users' final sessions reach the sink on an unbounded
-    stream (bounded state: one open session per active key)."""
-    (user_id,) = key
-    if state.hasTimedOut:
-        start, end, n = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_start": [pd.Timestamp(start, unit="us")],
-                "session_end": [pd.Timestamp(end, unit="us")],
-                "n_events": [n],
-            }
-        )
-        return
-
-    ts_us: list[int] = []
-    for pdf in batches:
-        ts_us.extend(int(t.value // 1_000) for t in pd.to_datetime(pdf["ts"]))
-    ts_us.sort()
-    if not ts_us:
-        return
-    sessions = []
-    if state.exists:
-        start, end, n = state.get
-    else:
-        start, end, n = ts_us[0], ts_us[0], 1
-        ts_us = ts_us[1:]
-    for t in ts_us:
-        if t - end > _GAP_US:
-            sessions.append((start, end, n))
-            start, end, n = t, t, 1
-        else:
-            # same interval-widening as _sessionize: late events within the
-            # watermark may predate the open session's start
-            start, end, n = min(start, t), max(end, t), n + 1
-    state.update((start, end, n))
-    # flush the open session once event time passes its gap horizon
-    state.setTimeoutTimestamp((end + _GAP_US) // 1_000)
-    if sessions:
-        yield pd.DataFrame(
-            {
-                "user_id": user_id,
-                "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in sessions],
-                "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in sessions],
-                "n_events": [n for _, _, n in sessions],
-            }
-        )
-
-
-def sessionize_stream_flushing(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Sessionization with EventTimeTimeout: closed sessions emit on the
-    closing event; idle sessions emit when the watermark passes their gap
-    horizon. Requires an event-time watermark on ``ts``."""
-    from mallarddv_spark.streaming.event_time import ensure_event_time
-
-    return (
-        ensure_event_time(events, "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_with_timeout,
-            outputStructType=SESSION_OUTPUT,
-            stateStructType=SESSION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )

@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from mallarddv_spark.functions.hashing import hash_col
+from mallarddv_spark.logging_utils import get_logger
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -97,8 +98,8 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines see identical values."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
+    except Exception:  # conf may be unsettable on this session
+        get_logger("suite").debug("nanosAsLong conf not set", exc_info=True)
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -94,14 +94,14 @@ def test_table_file_stats_counts(spark, fragmented_table):
 
 @pytest.fixture()
 def bucketed_table(spark):
-    from mallarddv_spark.sources.layout import write_bucketed
-
     spark.sql("CREATE DATABASE IF NOT EXISTS cmp_db")
     spark.sql("DROP TABLE IF EXISTS cmp_db.bkt")
     df = spark.range(0, 5_000).select(
         F.col("id"), (F.col("id") % 97).alias("k")
     )
-    write_bucketed(df, "cmp_db.bkt", "k", num_buckets=8, sort_col="id")
+    df.write.mode("overwrite").bucketBy(8, "k").sortBy("id").saveAsTable(
+        "cmp_db.bkt"
+    )
     # fragment it with appends (appends keep the bucket spec)
     for i in range(3):
         df.filter(F.col("id") % 4 == i).write.mode("append").bucketBy(

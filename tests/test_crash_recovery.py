@@ -292,8 +292,10 @@ def test_recover_sees_tables_named_current(spark, tmp_path):
 def test_killed_flow_run_id_not_reused(spark, tmp_path, monkeypatch):
     """A flow killed before its ledger append leaves DV rows under a run id
     the ledger never saw. A later flow — even from a new vault object, with
-    no ``recover()`` in between — must not allocate that id again: its
-    success row would adopt the torn rows and hide them from recovery."""
+    no ``recover()`` in between — must neither adopt that id nor build on
+    the torn rows: it is refused, writing nothing, until ``recover()``
+    removes exactly the torn rows. The re-run then leaves the state of a
+    vault that never crashed."""
     from mallarddv_spark import MallardSparkVault
     from mallarddv_spark.flow.executor import FlowExecutor
     from mallarddv_spark.flow.recovery import orphan_run_ids
@@ -329,15 +331,45 @@ def test_killed_flow_run_id_not_reused(spark, tmp_path, monkeypatch):
     torn = rows_of(2)
     assert torn == {"hub_orders": 1, "hsat_orders_details": 3}
 
-    # a new process's vault on the same catalog, no recover() first
+    # a new process's vault on the same catalog, no recover() first: the
+    # flow is refused, and so is a retry (the next flow checks again)
     v2 = MallardSparkVault(spark, **dbs)
-    assert flow(v2, "orders3.csv", 3) == []
-    assert orphan_run_ids(spark, "ru_meta", "ru_dv") == [2]
+    n_ledger = spark.table("ru_meta.runinfo").count()
+    for _ in range(2):
+        errs = flow(v2, "orders3.csv", 3)
+        assert len(errs) == 1 and errs[0][0] == "torn_state", errs
+        assert "[2]" in errs[0][1] and "vault.recover()" in errs[0][1]
+    assert spark.table("ru_meta.runinfo").count() == n_ledger
+    assert rows_of(3) == {"hub_orders": 0, "hsat_orders_details": 0}
     assert rows_of(2) == torn
     assert v2.recover() == torn
     assert rows_of(2) == {"hub_orders": 0, "hsat_orders_details": 0}
     assert orphan_run_ids(spark, "ru_meta", "ru_dv") == []
-    for db in dbs.values():
+    assert flow(v2, "orders3.csv", 3) == []
+
+    # same state as a vault that loaded orders1 then orders3, no crash
+    clean = {k: v.replace("ru_", "rc3_") for k, v in dbs.items()}
+    for db in clean.values():
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    v3 = MallardSparkVault(spark, **clean)
+    assert v3.init_vault(str(tmp_path / "tables.csv"),
+                         str(tmp_path / "transitions.csv")) == []
+    assert flow(v3, "orders1.csv", 1) == []
+    assert flow(v3, "orders3.csv", 3) == []
+
+    def state(dv_db):
+        return {
+            t: sorted(
+                tuple(str(x) for x in r)
+                for r in spark.table(f"{dv_db}.{t}").drop("run_id").collect()
+            )
+            for t in ("hub_orders", "hsat_orders_details")
+        }
+
+    got = state("ru_dv")
+    assert got == state("rc3_dv")
+    assert len(got["hub_orders"]) == 3  # orders 1, 2, 3
+    for db in (*dbs.values(), *clean.values()):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 

@@ -1270,71 +1270,6 @@ def test_html_to_text_extraction(spark):
         assert got[i] == want, (i, got[i], want)
 
 
-def test_fuzzy_decontaminate(spark):
-    """Near-dup decontamination: a lightly paraphrased benchmark item is
-    caught (where exact n-gram overlap at the same shingle size would
-    need a verbatim run), clean docs pass, verbatim leaks score ~1.0,
-    and the train side never shuffles (benchmark broadcast both ways)."""
-    from mallarddv_spark.operators.curation import fuzzy_decontaminate
-
-    bench_text = ("what is the capital of france paris is the capital "
-                  "and largest city of france")
-    para = ("what is the capital of france paris is the capital "
-            "and biggest city of france")  # one-word edit: near-dup
-    train = spark.createDataFrame(
-        [(1, bench_text),                       # verbatim leak
-         (2, para),                             # paraphrase leak
-         (3, "completely unrelated text about spark aggregation plans "
-             "and shuffle exchanges at scale")],
-        ["doc_id", "text"],
-    )
-    bench = spark.createDataFrame(
-        [(100, bench_text)], ["qid", "question"]
-    )
-    out = {r.id: r for r in fuzzy_decontaminate(
-        train, bench, "doc_id", "text",
-        bench_id_col="qid", bench_text_col="question",
-        num_perm=64, bands=32, threshold=0.5,
-    ).collect()}
-    assert out[1].contaminated and out[1].max_est_jaccard >= 0.95
-    assert out[2].contaminated and out[2].n_bench_matches == 1
-    assert not out[3].contaminated and out[3].max_est_jaccard is None
-    # scale-shape pin: no sort-merge join anywhere (benchmark broadcast)
-    from mallarddv_spark.plans.audit import plan_report
-    rep = plan_report(fuzzy_decontaminate(
-        train, bench, "doc_id", "text",
-        bench_id_col="qid", bench_text_col="question"))
-    assert rep["python_stages"] == 0
-
-
-def test_corpus_diff(spark):
-    """Snapshot diff by id + content fingerprint: added / removed /
-    changed / unchanged; normalize=True makes formatting-only churn
-    unchanged; duplicate ids collapse deterministically."""
-    from mallarddv_spark.operators.curation import corpus_diff
-
-    old = spark.createDataFrame(
-        [(1, "a b"), (2, "c d"), (3, "e f"), (5, "x  Y")],
-        ["doc_id", "text"])
-    new = spark.createDataFrame(
-        [(2, "c d"), (3, "e CHANGED"), (4, "new doc"), (5, "x y")],
-        ["doc_id", "text"])
-    got = {r.id: r.verdict
-           for r in corpus_diff(old, new, "doc_id", "text").collect()}
-    assert got == {1: "removed", 2: "unchanged", 3: "changed",
-                   4: "added", 5: "changed"}
-    norm = {r.id: r.verdict
-            for r in corpus_diff(old, new, "doc_id", "text",
-                                 normalize=True).collect()}
-    assert norm[5] == "unchanged"  # case + whitespace only
-    # duplicate ids collapse to min fingerprint on both sides
-    dup_old = old.unionByName(
-        spark.createDataFrame([(1, "a b")], ["doc_id", "text"]))
-    got2 = {r.id: r.verdict
-            for r in corpus_diff(dup_old, new, "doc_id", "text").collect()}
-    assert got2[1] == "removed"
-
-
 def test_weighted_sample(spark):
     """Efraimidis-Spirakis weighted sampling without replacement:
     exact size, layout determinism, salt re-roll, zero/NULL weights

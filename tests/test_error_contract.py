@@ -174,7 +174,7 @@ def test_logging_parity():
 def test_ledger_write_failure_surfaces(spark):
     """A flow whose final ledger append fails must not swallow it: the
     error joins the returned error list (stage 'write_runinfo') so callers
-    know the outcome was not durably recorded and replay will re-ingest."""
+    know the outcome was not durably recorded."""
     import os
     from unittest import mock
 

@@ -38,23 +38,6 @@ def dup_docs(spark):
 # --- dedup -----------------------------------------------------------------
 
 
-def test_exact_dedup(dup_docs):
-    out = dedup.exact_dedup(dup_docs, "doc_id", "text")
-    ids = {r.doc_id for r in out.collect()}
-    assert 2 not in ids  # exact dup dropped
-    assert {1, 3, 4, 5, 6} <= ids  # others kept (6 differs by case/ws)
-
-    norm = dedup.exact_dedup(dup_docs, "doc_id", "text", normalize=True)
-    # case/whitespace-insensitive: 6 collapses into 1 as well
-    assert {r.doc_id for r in norm.collect()} == {1, 3, 4, 5}
-
-
-def test_duplicate_clusters(dup_docs):
-    clusters = dedup.duplicate_clusters(dup_docs, "doc_id", "text").collect()
-    assert len(clusters) == 1
-    assert clusters[0].n_docs == 2 and clusters[0].keep_doc_id == 1
-
-
 def test_minhash_lsh_pairs(dup_docs):
     pairs = dedup.minhash_lsh_pairs(
         dup_docs, "doc_id", "text", num_perm=32, bands=8, threshold=0.5
@@ -217,27 +200,6 @@ def test_lang_guess(spark):
     assert got[1] == "en" and got[2] == "es" and got[3] == "de" and got[4] == "unknown"
 
 
-def test_sorted_fingerprint_catches_reorder(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "gamma alpha beta")], ["doc_id", "text"]
-    )
-    out = df.select(
-        "doc_id",
-        textops.normalized_fingerprint("text").alias("nf"),
-        textops.sorted_token_fingerprint("text").alias("sf"),
-    ).collect()
-    by_id = {r.doc_id: r for r in out}
-    assert by_id[1].nf != by_id[2].nf
-    assert by_id[1].sf == by_id[2].sf
-
-
-def test_rolling_hashes(spark):
-    df = spark.createDataFrame([(1, "a b c d e f g h i j")], ["doc_id", "text"])
-    arr = df.select(textops.rolling_hashes("text", window=8).alias("rh")).collect()[0].rh
-    assert len(arr) == 3  # 10 tokens, window 8 → positions 0,1,2
-    assert len(set(arr)) == 3
-
-
 # --- multimodal ------------------------------------------------------------
 
 
@@ -278,11 +240,6 @@ def test_multimodal_audio_video_modalities(spark):
     feats = {r.modality: r for r in multimodal.extract_features(audio.unionByName(video)).collect()}
     assert feats["audio"].width is None and feats["audio"].n_frames >= 1
     assert feats["video"].width is not None and feats["video"].n_frames >= 1
-
-    sampled = multimodal.sample_frames(video, every_n=24)
-    assert sampled.collect()[0].frame_stride == 24
-    resized = multimodal.resize_images(video, 224, 224)
-    assert resized.collect()[0].target_width == 224
 
 
 def test_embedding_neardup_bucketed_superset(spark, embeddings):
@@ -399,8 +356,9 @@ def test_multimodal_tier2_pil_decode(spark):
 
 
 def test_multimodal_chunk_roundtrip(spark):
-    """chunk_payload → assemble_chunks reproduces payloads byte-exactly
-    (the >2 GB layout, exercised with small chunks); external_reference
+    """chunk_payload's chunks, concatenated in chunk_idx order, reproduce
+    payloads byte-exactly (the >2 GB layout, exercised with small
+    chunks); external_reference
     rows carry URI + byte-range with NULL inline payload."""
     import hashlib
 
@@ -408,10 +366,10 @@ def test_multimodal_chunk_roundtrip(spark):
     df = spark.createDataFrame(rows, ["media_id", "blob"])
     chunks = multimodal.chunk_payload(df, "media_id", "blob", chunk_bytes=100)
     assert chunks.filter("chunk_idx >= n_chunks").count() == 0
-    back = {
-        r.media_id: r.payload
-        for r in multimodal.assemble_chunks(chunks).collect()
-    }
+    parts: dict = {}
+    for r in chunks.collect():
+        parts.setdefault(r.media_id, []).append((r.chunk_idx, r.chunk))
+    back = {mid: b"".join(c for _, c in sorted(ps)) for mid, ps in parts.items()}
     for mid, blob in rows:
         assert hashlib.md5(back[str(mid)]).digest() == hashlib.md5(blob).digest()
 
@@ -595,120 +553,6 @@ def test_semantic_dedup(spark):
         if r.id_a in b_survivors and r.id_b in b_survivors
     ]
     assert alive_b == []
-
-
-def test_mergeable_distinct_sketches(spark):
-    """Daily HLL sketches union to the month without rescanning: the
-    rolled-up estimate matches exact countDistinct within the lg_k=12
-    error bound, per-stratum rollups group correctly, and re-unioning is
-    idempotent (sketch state is a set union)."""
-    from mallarddv_spark.operators import sketches as sk
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    daily = sk.build_distinct_sketches(
-        ev.withColumn("day", F.to_date("ts")), ["day"], "user_id"
-    )
-    assert daily.count() == ev.select(F.to_date("ts")).distinct().count()
-
-    month = sk.merge_distinct_sketches(daily).first()
-    exact = ev.select("user_id").distinct().count()
-    assert abs(month.distinct_estimate - exact) <= max(3, exact * 0.05)
-    assert month.n_rows == ev.count()
-
-    # per-stratum rollup: (day, event_type) sketches → per-type uniques
-    typed = sk.build_distinct_sketches(
-        ev.withColumn("day", F.to_date("ts")), ["day", "event_type"], "user_id"
-    )
-    per_type = {
-        r.event_type: r.distinct_estimate
-        for r in sk.merge_distinct_sketches(typed, ["event_type"]).collect()
-    }
-    exact_per_type = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    for t, n in exact_per_type.items():
-        assert abs(per_type[t] - n) <= max(3, n * 0.05), t
-
-    # idempotent: unioning the month sketch with itself changes nothing
-    twice = sk.merge_distinct_sketches(
-        spark.createDataFrame(
-            [(month.distinct_sketch, 1), (month.distinct_sketch, 1)],
-            "distinct_sketch binary, n_rows long",
-        )
-    ).first()
-    assert twice.distinct_estimate == month.distinct_estimate
-
-
-def test_theta_sketch_set_algebra_and_heavy_hitters(spark):
-    """Theta sketches answer per-key set-algebra questions from stored
-    state: month-over-month user overlap matches exact set arithmetic
-    within sketch error; heavy hitters recover the exact top event types."""
-    from mallarddv_spark.operators import sketches as sk
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    early = ev.filter("ts < timestamp'2024-01-15'")
-    late = ev.filter("ts >= timestamp'2024-01-15'")
-    a = sk.build_theta_sketches(early, ["event_type"], "user_id")
-    b = sk.build_theta_sketches(late, ["event_type"], "user_id")
-    got = {r.event_type: r for r in sk.theta_overlap(a, b, ["event_type"]).collect()}
-
-    exact_a = {r.event_type: set(r.u) for r in early.groupBy("event_type")
-               .agg(F.collect_set("user_id").alias("u")).collect()}
-    exact_b = {r.event_type: set(r.u) for r in late.groupBy("event_type")
-               .agg(F.collect_set("user_id").alias("u")).collect()}
-    for t in got:
-        both = len(exact_a[t] & exact_b[t])
-        only = len(exact_a[t] - exact_b[t])
-        assert abs(got[t].both_distinct - both) <= max(3, both * 0.05), t
-        assert abs(got[t].left_only_distinct - only) <= max(3, only * 0.05), t
-
-    # full-outer semantics: a key present on one side only surfaces with
-    # the other side at 0 and left_only = its full count
-    extra = sk.build_theta_sketches(
-        early.withColumn("event_type", F.lit("ghost_type")),
-        ["event_type"], "user_id",
-    )
-    ga = {r.event_type: r for r in sk.theta_overlap(
-        a.unionByName(extra), b, ["event_type"]).collect()}
-    g = ga["ghost_type"]
-    assert g.right_distinct == 0 and g.both_distinct == 0
-    exact_ghost = early.select("user_id").distinct().count()
-    assert abs(g.left_only_distinct - exact_ghost) <= max(3, exact_ghost * 0.05)
-
-    # union across segments matches global distinct
-    merged = sk.merge_theta_sketches(a).first()
-    exact_early = early.select("user_id").distinct().count()
-    assert abs(merged.distinct_estimate - exact_early) <= max(3, exact_early * 0.05)
-
-    # heavy hitters: top-3 event types per user bucket match exact counts
-    hh = sk.approx_heavy_hitters(
-        ev.withColumn("bucket", F.col("user_id") % 2), ["bucket"],
-        "event_type", k=3,
-    )
-    got_top = {(r.bucket, r.rnk): (r.item, r.approx_count) for r in hh.collect()}
-    exact = (
-        ev.withColumn("bucket", F.col("user_id") % 2)
-        .groupBy("bucket", "event_type").count().collect()
-    )
-    from collections import defaultdict
-    per_bucket = defaultdict(list)
-    for r in exact:
-        per_bucket[r.bucket].append((r["count"], r.event_type))
-    for bkt, items in per_bucket.items():
-        top_counts = sorted((c for c, _ in items), reverse=True)[:3]
-        got_bkt = sorted(
-            (cnt, item) for (b, _), (item, cnt) in got_top.items() if b == bkt
-        )
-        # counts agree exactly (tie ORDER between equal-count items is
-        # sketch-defined, so compare the count multiset + membership)
-        assert sorted((c for c, _ in got_bkt), reverse=True) == top_counts
-        exact_lookup = {(c, i) for c, i in items}
-        assert all((c, i) in exact_lookup for c, i in got_bkt), (bkt, got_bkt)
 
 
 def test_write_training_shards(spark, tmp_path):
@@ -961,91 +805,6 @@ def test_packed_shards_null_doc_id_and_torn_manifest(spark, tmp_path):
     assert h[0] == "a" and h[4294967296] is None
 
 
-def test_read_training_shards_manifest_contract(spark, tmp_path):
-    """The text-shard reader: happy path returns the certified rows;
-    missing manifest and post-write tampering are refused; jsonl mode
-    reads back through the explicit schema."""
-    import glob
-    import os
-
-    import pytest
-
-    from mallarddv_spark.exceptions import DVETLError
-    from mallarddv_spark.operators.textops import (
-        read_training_shards, write_training_shards,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(i % 9 + 2)))
-         for i in range(60)],
-        "doc_id bigint, text string",
-    )
-    path = str(tmp_path / "ts")
-    m = write_training_shards(docs, path, "doc_id", "text",
-                              token_budget=32, n_shards=3)
-    out = read_training_shards(spark, path)
-    assert out.count() == m["total_docs"] == 60
-    assert int(out.agg(F.sum("n_tokens")).first()[0]) == m["total_tokens"]
-    with pytest.raises(DVETLError, match="no manifest"):
-        read_training_shards(spark, str(tmp_path / "absent"))
-    victim = sorted(glob.glob(f"{path}/data/shard_id=*/*.parquet"))[0]
-    os.remove(victim)
-    with pytest.raises(DVETLError, match="diverge from the manifest"):
-        read_training_shards(spark, path)
-    pj = str(tmp_path / "tsj")
-    write_training_shards(docs, pj, "doc_id", "text", token_budget=32,
-                          n_shards=3, file_format="jsonl")
-    jout = read_training_shards(spark, pj)
-    assert jout.count() == 60
-    assert int(jout.agg(F.sum("n_tokens")).first()[0]) == m["total_tokens"]
-
-
-def test_packing_plan_report_sizing_rule(spark):
-    """The pre-pack audit: exact counts/bounds on a known corpus, the
-    docs×bins recommendation respects the fold-ops cap, and the
-    min-padding bound is consistent with an actual FFD pack."""
-    import pytest
-
-    from mallarddv_spark.exceptions import DVConfigurationError
-    from mallarddv_spark.operators.textops import (
-        pack_bins_ffd, packing_plan_report,
-    )
-
-    rows = [(i, [0] * (50 + (i * 37) % 200)) for i in range(1000)]
-    rows.append((1000, [0] * 999))  # one oversize doc (budget 256)
-    df = spark.createDataFrame(rows, "doc_id bigint, ids array<int>")
-    rep = packing_plan_report(df, ids_col="ids", token_budget=256)
-    want_tokens = sum(len(v) for _, v in rows)
-    assert rep["docs"] == 1001 and rep["tokens"] == want_tokens
-    assert rep["oversize"] == 1 and rep["max_len"] == 999
-    # lower bound: oversize bin + ceil(rest / budget)
-    rest = want_tokens - 999
-    assert rep["min_bins"] == 1 + -(-rest // 256)
-    assert 0.0 <= rep["min_padding_frac"] < 1.0
-    # the recommendation keeps docs/shard x bins/shard under the cap
-    n = rep["recommended_n_shards"]
-    docs_ps = rep["docs"] / n
-    bins_ps = docs_ps * rep["mean_len"] / 256
-    assert docs_ps * bins_ps <= rep["fold_ops_per_shard"] * 1.05
-    # a real pack at the recommended shard count can't beat min_bins
-    got_bins = pack_bins_ffd(
-        df.selectExpr("doc_id", "size(ids) as n_ids"), "doc_id",
-        length_col="n_ids", token_budget=256, n_shards=n,
-    ).select("shard_id", "bin_id").distinct().count()
-    assert got_bins >= rep["min_bins"]
-    with pytest.raises(DVConfigurationError):
-        packing_plan_report(df, ids_col="ids", length_col="x")
-    with pytest.raises(DVConfigurationError):
-        packing_plan_report(df)
-    # NULL ids arrays are surfaced, not silently folded into the stats
-    withnull = df.unionByName(spark.createDataFrame(
-        [(9999, None)], "doc_id bigint, ids array<int>"
-    ))
-    repn = packing_plan_report(withnull, ids_col="ids", token_budget=256)
-    assert repn["null_length_docs"] == 1
-    assert repn["docs"] == 1002 and repn["tokens"] == rep["tokens"]
-
-
 def test_token_id_histogram_counts_and_unknowns(spark):
     """Exact id counts, vocab join with NULL for unknown/unk_id
     placeholders, deterministic top_k cut."""
@@ -1179,26 +938,6 @@ def test_substring_cap_is_groupby_not_window(spark):
     assert specs == {"doc_a"}, specs
 
 
-def test_mark_substring_duplicates_keep_first(spark):
-    rows = [
-        (1, "a b c d e f g h"),
-        (2, "z z a b c d e f"),
-        (3, "q r s t u v w y"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r.doc_id: (r.substr_dup, r.max_shared_run)
-        for r in dedup.mark_substring_duplicates(
-            df, "doc_id", "text", min_run_tokens=6,
-            max_kgram_occurrences=None,
-        ).collect()
-    }
-    # doc 1 is the earliest holder -> survives; doc 2 flagged (6-run vs 1)
-    assert out[1] == (False, 0)
-    assert out[2] == (True, 6)
-    assert out[3] == (False, 0)
-
-
 # --- bigram-LM fluency scoring ---------------------------------------------
 
 
@@ -1236,23 +975,6 @@ def test_bigram_lm_scoring_and_backoff(spark):
     # doc 12: OOV floor ln(0.4 * 0.5 / N)
     assert abs(out[12].avg_logprob - round(math.log(0.4 * 0.5 / n), 6)) < 1e-6
     assert 13 not in out  # no bigrams, no row
-
-
-def test_fluency_filter_keeps_short_docs(spark):
-    docs = spark.createDataFrame(
-        [(1, "the cat sat on the mat"), (2, "mat on zz qq pp ww"), (3, "hi")],
-        ["doc_id", "text"],
-    )
-    lm = textops.train_bigram_lm(docs.filter("doc_id = 1"), "text")
-    out = {
-        r.doc_id: r.fluency_keep
-        for r in textops.fluency_filter(
-            docs, "doc_id", "text", lm, min_avg_logprob=-2.0
-        ).collect()
-    }
-    assert out[1] is True       # fluent under its own LM
-    assert out[2] is False      # OOV soup scores far below the floor
-    assert out[3] is True       # no-bigram doc kept by policy
 
 
 def test_perplexity_buckets_ccnet_split(spark):
@@ -1696,33 +1418,6 @@ def test_kn_ngram_matches_python_reference_orders_4_and_5(spark):
         test, "doc_id", "text", lm).count() == 4
 
 
-def test_ngram_lm_save_load_roundtrip(spark, tmp_path):
-    """A persisted n-gram model scores identically to the in-memory
-    one (the CCNet train-once shape); a torn save (no params) fails
-    loudly; the loaded dict keeps the lower-order scorer aliases."""
-    train = spark.createDataFrame(
-        [(1, "the cat sat on the mat"),
-         (2, "the dog sat on the rug")], ["doc_id", "text"])
-    test = spark.createDataFrame(
-        [(10, "the cat sat on"), (11, "zz qq yy ww")], ["doc_id", "text"])
-    lm = textops.train_ngram_lm(train, "text", order=4)
-    path = str(tmp_path / "knlm4")
-    textops.save_ngram_lm(lm, path)
-    loaded = textops.load_ngram_lm(spark, path)
-    a = sorted(map(str, textops.score_kn_ngram_logprob(
-        test, "doc_id", "text", lm).collect()))
-    b = sorted(map(str, textops.score_kn_ngram_logprob(
-        test, "doc_id", "text", loaded).collect()))
-    assert a == b and len(a) == 2
-    assert textops.score_kn_logprob(test, "doc_id", "text", loaded).count() == 2
-    with pytest.raises(DVConfigurationError, match="ngram"):
-        textops.save_ngram_lm(textops.train_bigram_lm(train, "text"), path)
-    import shutil
-    shutil.rmtree(f"{path}/params")
-    with pytest.raises(Exception):
-        textops.load_ngram_lm(spark, path)
-
-
 def test_kn_discount_guard(spark):
     lm = textops.train_bigram_lm(
         spark.createDataFrame([(1, "a b")], ["doc_id", "text"]), "text"
@@ -1776,220 +1471,6 @@ def test_containment_property_matches_sets(spark, texts):
         ).collect()
     }
     assert got == want
-
-
-def test_webdataset_export_roundtrip_and_determinism(spark, tmp_path):
-    """WebDataset tar export: the pairing convention round-trips (every
-    sample = {key}.bin + {key}.json, key-ascending), payload bytes and
-    metadata survive exactly, two runs are byte-identical, the manifest
-    certifies read-back counts, and a completed export refuses
-    overwrite."""
-    import json
-    import tarfile
-
-    docs = spark.createDataFrame(
-        [(i, bytes([i % 256] * (10 + i)), f"src{i % 3}", i * 10)
-         for i in range(20)],
-        "doc_id bigint, blob binary, source string, n bigint",
-    )
-    out1, out2 = str(tmp_path / "wds1"), str(tmp_path / "wds2")
-    m1 = multimodal.write_webdataset_shards(
-        docs, out1, "doc_id", "blob", meta_cols=["source", "n"], n_shards=3
-    )
-    assert m1["total_samples"] == 20
-    assert m1["n_shards"] >= 1 and len(m1["shards"]) == m1["n_shards"]
-    # round-trip every member
-    seen = {}
-    for s in m1["shards"]:
-        with tarfile.open(f"{out1}/{s['shard']}", "r") as tf:
-            names = [m.name for m in tf.getmembers()]
-            # pairing + ordering: bin immediately followed by its json,
-            # keys ascending within the shard
-            keys = [n[:-4] for n in names if n.endswith(".bin")]
-            assert keys == sorted(keys)
-            for k in keys:
-                assert f"{k}.json" in names
-                payload = tf.extractfile(f"{k}.bin").read()
-                meta = json.loads(tf.extractfile(f"{k}.json").read())
-                seen[int(k)] = (payload, meta)
-    assert len(seen) == 20
-    for i in range(20):
-        payload, meta = seen[i]
-        assert payload == bytes([i % 256] * (10 + i))
-        assert meta == {"source": f"src{i % 3}", "n": i * 10}
-    # determinism: a second export is byte-identical per shard
-    multimodal.write_webdataset_shards(
-        docs, out2, "doc_id", "blob", meta_cols=["source", "n"], n_shards=3
-    )
-    for s in m1["shards"]:
-        b1 = open(f"{out1}/{s['shard']}", "rb").read()
-        b2 = open(f"{out2}/{s['shard']}", "rb").read()
-        assert b1 == b2, s["shard"]
-    # completed exports refuse overwrite; manifest certifies counts
-    with pytest.raises(DVConfigurationError, match="manifest"):
-        multimodal.write_webdataset_shards(
-            docs, out1, "doc_id", "blob", n_shards=3
-        )
-    disk = json.load(open(f"{out1}/manifest.json"))
-    assert disk["total_samples"] == 20
-    assert all(s["n_members"] == 2 * s["n_samples"] for s in disk["shards"])
-
-
-def test_webdataset_aborted_export_guard(spark, tmp_path):
-    """A target dir holding shard tars WITHOUT a manifest (prior aborted
-    export — possibly with a different n_shards) must be refused, never
-    silently counted into the new manifest; orphaned .tmp-* files from
-    failed task attempts are swept, not certified."""
-    docs = spark.createDataFrame(
-        [(i, bytes([i]) * 4) for i in range(6)], "doc_id bigint, blob binary"
-    )
-    out = tmp_path / "wds"
-    out.mkdir()
-    (out / "shard-00007.tar").write_bytes(b"stale tar from aborted run")
-    with pytest.raises(DVConfigurationError, match="aborted"):
-        multimodal.write_webdataset_shards(
-            docs, str(out), "doc_id", "blob", n_shards=2
-        )
-    # orphan tmp files alone (no live shard tars) are swept and the
-    # export proceeds clean
-    (out / "shard-00007.tar").unlink()
-    (out / "shard-00001.tar.tmp-42").write_bytes(b"failed attempt junk")
-    m = multimodal.write_webdataset_shards(
-        docs, str(out), "doc_id", "blob", n_shards=2
-    )
-    assert m["total_samples"] == 6
-    leftovers = [p.name for p in out.iterdir() if ".tmp-" in p.name]
-    assert leftovers == []
-    assert {s["shard"] for s in m["shards"]} == {
-        p.name for p in out.iterdir() if p.name.endswith(".tar")
-    }
-
-
-def test_prune_ngram_lm_matches_python_and_is_closed(spark):
-    """KenLM-style count-threshold pruning: the pruned model scores
-    exactly what the pure-Python KN reference computes over identically
-    pruned counts; non-decreasing thresholds keep the model closed
-    (every kept k-gram's prefix and suffix survive); guards enforce
-    KenLM's rules."""
-    import math
-    from collections import Counter
-
-    train_rows = [
-        (1, "the cat sat on the mat today"),
-        (2, "the dog sat on the rug today"),
-        (3, "a cat and a dog sat down on the mat"),
-        (4, "the cat sat on a rug in the sun"),
-        (5, "the dog ran on the mat today"),
-        (6, "the cat sat on the mat again"),
-        (7, "the cat sat on the mat again"),
-    ]
-    test_rows = [
-        (10, "the cat sat on the mat"),
-        (11, "a dog sat down on the rug"),
-        (12, "rug mat dog sat on the"),
-    ]
-    train_texts = [t for _, t in train_rows]
-    n, D = 4, 0.75
-    THR = {2: 2, 3: 2, 4: 3}
-
-    def py_kn_pruned(n):
-        grams = {k: Counter() for k in range(1, n + 1)}
-        for t in train_texts:
-            ws = t.lower().split()
-            for k in range(1, n + 1):
-                grams[k].update(
-                    tuple(ws[i:i + k]) for i in range(len(ws) - k + 1)
-                )
-        for k, c in THR.items():
-            if k <= n:
-                grams[k] = Counter(
-                    {g: v for g, v in grams[k].items() if v >= c}
-                )
-        T = len(grams[2])
-        nbb = Counter(g[1] for g in grams[2])
-        ncb, nmid, nfm = {}, {}, {}
-        for k in range(2, n):
-            types = set(grams[k + 1])
-            ncb[k] = Counter(g[1:] for g in types)
-            nmid[k] = Counter(g[1:-1] for g in types)
-            nfm[k] = Counter(s[:-1] for s in ncb[k])
-        nf_top = Counter(g[:-1] for g in grams[n])
-
-        def pc(w):
-            return (float(nbb[w]) if w in nbb else 0.5) / float(T)
-
-        def p_k(k, suf):
-            if k == 1:
-                return pc(suf[0])
-            lower = p_k(k - 1, suf[1:])
-            mid = suf[:-1]
-            if mid in nmid[k]:
-                return (
-                    max(float(ncb[k].get(suf, 0)) - D, 0.0)
-                    / float(nmid[k][mid])
-                    + (D * float(nfm[k][mid]) / float(nmid[k][mid])) * lower
-                )
-            return lower
-
-        def lp(gram):
-            ctx = gram[:-1]
-            lower = p_k(n - 1, gram[1:])
-            if ctx in grams[n - 1]:
-                c = float(grams[n - 1][ctx])
-                return math.log(
-                    max(float(grams[n].get(gram, 0)) - D, 0.0) / c
-                    + (D * float(max(nf_top.get(ctx, 0), 1)) / c) * lower
-                )
-            return math.log(lower)
-
-        want = {}
-        for did, t in test_rows:
-            ws = t.lower().split()
-            gs = [tuple(ws[i:i + n]) for i in range(len(ws) - n + 1)]
-            if not gs:
-                continue
-            lp10 = [round(lp(g) * 1e10) for g in gs]
-            want[did] = (
-                len(gs),
-                sum(1 for g in gs if g[:-1] not in grams[n - 1]),
-                round(sum(lp10) / (1e10 * len(gs)), 6),
-            )
-        return want
-
-    train = spark.createDataFrame(train_rows, ["doc_id", "text"])
-    test = spark.createDataFrame(test_rows, ["doc_id", "text"])
-    lm = textops.train_ngram_lm(train, "text", order=n)
-    pruned = textops.prune_ngram_lm(lm, THR)
-    # the model genuinely shrank at every pruned order
-    for k in range(2, n + 1):
-        assert pruned["ngrams"][k].count() < lm["ngrams"][k].count(), k
-    # closure: every kept k-gram's (k-1)-gram prefix AND suffix kept
-    for k in range(2, n + 1):
-        lower = {
-            tuple(r)[: k - 1]
-            for r in pruned["ngrams"][k - 1].drop("cnt")
-            .selectExpr(*[f"w{i+1}" for i in range(k - 1)]).collect()
-        }
-        for r in pruned["ngrams"][k].drop("cnt").selectExpr(
-            *[f"w{i+1}" for i in range(k)]
-        ).collect():
-            g = tuple(r)
-            assert g[:-1] in lower, ("prefix", k, g)
-            assert g[1:] in lower, ("suffix", k, g)
-    # scoring the pruned model == pure-Python KN over pruned counts
-    got = {r.id: (r.n_ngrams, r.n_oov_ctx, r.avg_logprob)
-           for r in textops.score_kn_ngram_logprob(
-               test, "doc_id", "text", pruned, order=n).collect()}
-    assert got == py_kn_pruned(n), (got, py_kn_pruned(n))
-    # guards: KenLM's rules
-    with pytest.raises(DVConfigurationError, match="unpruned"):
-        textops.prune_ngram_lm(lm, {1: 2})
-    with pytest.raises(DVConfigurationError, match="non-decreasing"):
-        textops.prune_ngram_lm(lm, {2: 3, 3: 2})
-    with pytest.raises(DVConfigurationError, match="orders"):
-        textops.prune_ngram_lm(lm, {9: 2})
-    with pytest.raises(DVConfigurationError, match="ngram"):
-        textops.prune_ngram_lm({"order": 2}, {2: 2})
 
 
 def test_pack_bins_ffd_matches_python_reference(spark):
@@ -2097,160 +1578,6 @@ def test_pack_bins_ffd_length_col(spark):
         textops.pack_bins_ffd(with_len, "doc_id")
 
 
-def test_export_arpa_backoff_evaluator_reproduces_scorer(spark, tmp_path):
-    """export_arpa: a STANDARD ARPA backoff evaluator (pure Python,
-    stored-prob lookup + bow-chain fallback + <unk>) over the exported
-    entries reproduces score_kn_ngram_logprob on every query class —
-    seen grams, unseen-gram/seen-context at each level, unseen
-    contexts, OOV words — at orders 3 and 4; the text serialization
-    round-trips through a file parse."""
-    import math
-
-    train_rows = [
-        (1, "the cat sat on the mat today"),
-        (2, "the dog sat on the rug today"),
-        (3, "a cat and a dog sat down on the mat"),
-        (4, "the cat sat on a rug in the sun"),
-        (5, "the dog ran on the mat today"),
-    ]
-    test_rows = [
-        (10, "the cat sat on the mat"),
-        (11, "rug mat dog sat on the"),
-        (12, "zz qq yy ww vv"),
-        (13, "a dog sat down on the rug"),
-    ]
-    train = spark.createDataFrame(train_rows, ["doc_id", "text"])
-    test = spark.createDataFrame(test_rows, ["doc_id", "text"])
-    lm = textops.train_ngram_lm(train, "text", order=4)
-
-    def load_entries(rows):
-        table = {}
-        unk = None
-        for k, gram, lp, bow in rows:
-            g = tuple(gram.split(" "))
-            if g == ("<unk>",):
-                unk = lp
-                continue
-            table.setdefault(k, {})[g] = (lp, bow)
-        return table, unk
-
-    def arpa_eval(table, unk, gram):
-        """standard backoff: ln p(w | ctx)"""
-        k = len(gram)
-        if k == 1:
-            if gram in table.get(1, {}):
-                return table[1][gram][0] * math.log(10)
-            return unk * math.log(10)
-        if gram in table.get(k, {}):
-            return table[k][gram][0] * math.log(10)
-        ctx = gram[:-1]
-        bow_entry = table.get(k - 1, {}).get(ctx)
-        bow = (bow_entry[1] if bow_entry and bow_entry[1] is not None
-               else 0.0)
-        return bow * math.log(10) + arpa_eval(table, unk, gram[1:])
-
-    for n in (3, 4):
-        entries = textops.export_arpa(lm, order=n)
-        rows = [(r.k, r.gram, r.log10p, r.log10bow)
-                for r in entries.collect()]
-        table, unk = load_entries(rows)
-        assert unk is not None
-        got = {r.id: r for r in textops.score_kn_ngram_logprob(
-            test, "doc_id", "text", lm, order=n).collect()}
-        for did, text in test_rows:
-            ws = text.lower().split()
-            gs = [tuple(ws[i:i + n]) for i in range(len(ws) - n + 1)]
-            if not gs:
-                assert did not in got
-                continue
-            lps = [arpa_eval(table, unk, g) for g in gs]
-            want = sum(round(x * 1e10) for x in lps) / (1e10 * len(gs))
-            assert abs(got[did].avg_logprob - round(want, 6)) <= 2e-6, (
-                n, did, got[did].avg_logprob, want,
-            )
-    # text round-trip: parse the file back, re-evaluate one doc
-    entries = textops.export_arpa(lm, order=3)
-    path = str(tmp_path / "model.arpa")
-    textops.write_arpa_text(entries, path)
-    lines = open(path, encoding="utf-8").read().splitlines()
-    assert lines[0] == "\\data\\" and lines[-1] == "\\end\\"
-    parsed = []
-    section = None
-    for ln in lines[1:-1]:
-        if ln.startswith("\\") and ln.endswith("-grams:"):
-            section = int(ln[1])
-            continue
-        if not ln or ln.startswith("ngram "):
-            continue
-        parts = ln.split("\t")
-        parsed.append((section, parts[1], float(parts[0]),
-                       float(parts[2]) if len(parts) > 2 else None))
-    table, unk = load_entries(parsed)
-    got = {r.id: r.avg_logprob for r in textops.score_kn_ngram_logprob(
-        test, "doc_id", "text", lm, order=3).collect()}
-    ws = test_rows[0][1].lower().split()
-    gs = [tuple(ws[i:i + 3]) for i in range(len(ws) - 2)]
-    want = sum(arpa_eval(table, unk, g) for g in gs) / len(gs)
-    assert abs(got[10] - want) <= 1e-5
-    # guards
-    with pytest.raises(DVConfigurationError, match="order"):
-        textops.export_arpa(lm, order=5)
-    with pytest.raises(DVConfigurationError, match="ngram"):
-        textops.export_arpa({"order": 3})
-
-
-def test_load_arpa_and_score_full_circle(spark, tmp_path):
-    """Interop full circle: train → export_arpa → write text → load_arpa
-    → score_arpa_logprob reproduces score_kn_ngram_logprob (to the text
-    file's 7 dp) on every query class, orders 3 and 4; OOV words count
-    as unigram misses; guards."""
-    train_rows = [
-        (1, "the cat sat on the mat today"),
-        (2, "the dog sat on the rug today"),
-        (3, "a cat and a dog sat down on the mat"),
-        (4, "the cat sat on a rug in the sun"),
-        (5, "the dog ran on the mat today"),
-    ]
-    test_rows = [
-        (10, "the cat sat on the mat"),
-        (11, "rug mat dog sat on the"),
-        (12, "zz qq yy ww vv"),
-        (13, "a dog sat down on the rug"),
-    ]
-    train = spark.createDataFrame(train_rows, ["doc_id", "text"])
-    test = spark.createDataFrame(test_rows, ["doc_id", "text"])
-    lm = textops.train_ngram_lm(train, "text", order=4)
-    # equivalence holds at the export's own top order: a 4-gram ARPA's
-    # level-3 entries are continuation-based MIDDLE-level probabilities,
-    # not an order-3 top level (standard ARPA semantics — KenLM also
-    # queries a file at its own order)
-    loaded = None
-    for n in (3, 4):
-        path = str(tmp_path / f"m{n}.arpa")
-        exported = textops.export_arpa(lm, order=n)
-        textops.write_arpa_text(exported, path)
-        loaded = textops.load_arpa(spark, path)
-        # the parse recovers exactly the exported entry set
-        assert loaded.count() == exported.count()
-        want = {r.id: r for r in textops.score_kn_ngram_logprob(
-            test, "doc_id", "text", lm, order=n).collect()}
-        got = {r.id: r for r in textops.score_arpa_logprob(
-            test, "doc_id", "text", loaded, order=n).collect()}
-        assert set(got) == set(want)
-        for did in want:
-            assert got[did].n_ngrams == want[did].n_ngrams
-            assert abs(got[did].avg_logprob
-                       - want[did].avg_logprob) <= 1e-5, (n, did)
-    # OOV accounting: doc 12 is pure OOV at every position
-    got4 = {r.id: r for r in textops.score_arpa_logprob(
-        test, "doc_id", "text", loaded).collect()}
-    assert got4[12].n_oov == got4[12].n_ngrams
-    assert got4[10].n_oov == 0
-    import pytest as _pt
-    with _pt.raises(DVConfigurationError, match="order"):
-        textops.score_arpa_logprob(test, "doc_id", "text", loaded, order=9)
-
-
 def test_script_profile(spark):
     """Unicode-script composition: fractions over non-whitespace chars,
     fixed-order dominant argmax, 'none' for empty docs, digits counted
@@ -2286,28 +1613,6 @@ def test_script_profile(spark):
     from mallarddv_spark.plans.audit import plan_report
     assert plan_report(textops.script_profile(
         df, "doc_id", "text"))["python_stages"] == 0
-
-
-def test_split_sentences(spark):
-    """Regex sentence segmentation: terminator runs, decimals kept
-    whole, closing quotes, no-terminator and empty texts."""
-    rows = [
-        (1, "First sentence. Second one! Is this third? Yes.",
-         ["First sentence.", "Second one!", "Is this third?", "Yes."]),
-        (2, "Pi is 3.14 and that is fine. Next sentence.",
-         ["Pi is 3.14 and that is fine.", "Next sentence."]),
-        (3, "no terminator here", ["no terminator here"]),
-        (4, "   ", []),
-        (5, 'He said "Go." Then left.', ['He said "Go."', "Then left."]),
-        (6, "Really?! Are you sure... Yes.",
-         ["Really?!", "Are you sure...", "Yes."]),
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t, _ in rows], "id bigint, text string")
-    got = {r.id: list(r.s) for r in df.select(
-        "id", textops.split_sentences("text").alias("s")).collect()}
-    for i, _, want in rows:
-        assert got[i] == want, (i, got[i], want)
 
 
 def test_optimal_lsh_params_known_points(spark):

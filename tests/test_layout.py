@@ -1,52 +1,5 @@
-"""Bucketed-layout tests: a join against a table bucketed on the join key
-must not shuffle the bucketed side."""
-
-from pyspark.sql import functions as F
-
-from mallarddv_spark.functions.hashing import hash_col
-from mallarddv_spark.sources.layout import suggest_buckets, write_bucketed
-
-
-def test_suggest_buckets():
-    assert suggest_buckets(10 << 20) == 1
-    assert suggest_buckets(10 << 30) == 128  # 10 GiB / 128 MiB = 80 → 128
-
-
-def test_bucketed_antijoin_skips_exchange(spark):
-    spark.sql("CREATE DATABASE IF NOT EXISTS layout_test")
-    hub = (
-        spark.range(10_000)
-        .select(hash_col(["id"]).alias("hk"), F.col("id").alias("bk"))
-    )
-    write_bucketed(hub, "layout_test.hub_bucketed", "hk", num_buckets=8)
-
-    incoming = spark.range(9_000, 11_000).select(
-        hash_col(["id"]).alias("hk"), F.col("id").alias("bk")
-    )
-    existing = spark.table("layout_test.hub_bucketed").select("hk")
-    new = incoming.join(existing, on="hk", how="left_anti")
-
-    assert new.count() == 1_000  # 10000..10999 are new
-
-    # disable auto-broadcast so the join must consider shuffling, then check
-    # the bucketed side reads without an Exchange
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = new._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    # the scan of the bucketed table appears with SelectedBucketsCount and
-    # feeds the SortMergeJoin without an Exchange in between
-    assert "SelectedBucketsCount" in plan
-    scan_block = [b for b in plan.split("\n\n") if "hub_bucketed" in b]
-    assert scan_block, plan
-    # count Exchange nodes: exactly one (the incoming side), not two
-    import re
-
-    n_exchanges = len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE))
-    assert n_exchanges == 1, plan
+"""Catalog-statistics tests: ``vault.analyze_tables`` lands the stats the
+cost-based optimizer reads for join planning."""
 
 
 def test_analyze_tables_records_stats(spark):

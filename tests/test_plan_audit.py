@@ -72,72 +72,3 @@ def test_rangejoin_passes_audit(spark):
     out = point_in_interval_join(ev, iv, "t", "s", "e", bin_width=50)
     out.collect()
     assert_plan(out, no_python_stages=True, no_nested_loop_joins=True)
-
-
-def test_flow_plan_guard_blocks_planted_nested_loop(spark):
-    """execute_flow(plan_guard=...) audits the hash view's plan before any
-    vault write: a staging view hiding a nested-loop join fails the flow
-    with the audit message, loads nothing, and records a 'failure' ledger
-    row; a clean flow under the same guard passes."""
-    from mallarddv_spark import MallardSparkVault
-
-    dbs = dict(stg_db="pg_stg", dv_db="pg_dv", bv_db="pg_bv",
-               metadata_db="pg_meta")
-    for db in dbs.values():
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    v = MallardSparkVault(spark, **dbs)
-    assert v.init_vault("tests/fixtures/tables.csv",
-                        "tests/fixtures/transitions.csv") == []
-
-    # clean flow passes under a strict guard (hash view = pure projection)
-    spark.sql(
-        "INSERT OVERWRITE pg_stg.customer VALUES "
-        "(1,'a','b','a@x.io',timestamp'2025-01-01',NULL,NULL)"
-    )
-    assert v.execute_flow(
-        "customer", "pg",
-        load_date_overwrite="2025-01-01 00:00:00",
-        plan_guard={"no_nested_loop_joins": True, "no_python_stages": True,
-                    "max_shuffles": 0},
-    ) == []
-    n_before = spark.table("pg_dv.hub_customer").count()
-
-    # plant a nested-loop join UNDER the staging name: replace the table
-    # with a theta-join view (the shape a hand-written user staging view
-    # could smuggle in)
-    spark.sql("DROP TABLE pg_stg.customer")
-    spark.sql(
-        """CREATE VIEW pg_stg.customer AS
-           SELECT cast(a.id AS int) AS id, 'x' AS first_name,
-                  'y' AS last_name, 'z@x.io' AS email,
-                  timestamp'2025-01-01' AS created_date,
-                  cast(NULL AS int) AS referenced_by,
-                  cast(NULL AS string) AS reference_code
-           FROM range(5) a JOIN range(5) b ON a.id <= b.id"""
-    )
-    errs = v.execute_flow(
-        "customer", "pg", force_load=True,
-        load_date_overwrite="2025-01-02 00:00:00",
-        plan_guard={"no_nested_loop_joins": True},
-    )
-    assert len(errs) == 1 and errs[0][0] == "plan_guard"
-    assert "nested-loop" in errs[0][1]
-    # nothing loaded, failure recorded
-    assert spark.table("pg_dv.hub_customer").count() == n_before
-    last = (
-        spark.table("pg_meta.runinfo")
-        .orderBy(F.desc("run_id")).limit(2).collect()
-    )
-    assert {r.status for r in last} >= {"failure"}
-
-    # an unknown guard option is surfaced, not swallowed
-    errs = v.execute_flow(
-        "customer", "pg", force_load=True,
-        load_date_overwrite="2025-01-02 00:00:00",
-        plan_guard={"no_such_option": True},
-    )
-    assert errs and errs[0][0] == "plan_guard"
-    assert "bad plan_guard option" in errs[0][1]
-
-    for db in dbs.values():
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

@@ -8,8 +8,8 @@ tables value-for-value. This is the strongest parity statement we can make:
 not golden constants, but the reference executing live next to us.
 
 The reference's ``execute_flow`` file-load path is skipped (its
-check_source_for_ingestion probe is a verified no-op defect, SURVEY §8.2);
-both systems get pre-staged rows and run hash-view + hub/link/sat loads.
+staging-definition probe is a verified no-op defect, SURVEY §8.2; this
+engine's version is ``MetadataCache.has_staging_definition``); both systems get pre-staged rows and run hash-view + hub/link/sat loads.
 """
 
 import hashlib

@@ -67,9 +67,3 @@ def test_shred_in_place(spark):
     )
     assert dict(out.dtypes)["payload"] == "variant"
     assert out.first().a == 7
-
-
-def test_inferred_payload_schema(spark):
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    schema = sv.inferred_payload_schema(ev, "props")
-    assert "k" in schema and "OBJECT" in schema.upper()

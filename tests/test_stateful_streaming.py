@@ -1,59 +1,11 @@
-"""applyInPandasWithState: state must accumulate across micro-batches and
-the final emitted profile must equal the batch ground truth."""
+"""applyInPandasWithState: session state must stitch across micro-batches
+and the emitted sessions must equal the batch ground truth."""
 
 from pyspark.sql import functions as F
 
-from mallarddv_spark.streaming.stateful import running_user_profile
 from mallarddv_spark.suite import read_events
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_running_profile_accumulates_across_batches(spark, tmp_path):
-    events = read_events(spark, SF).filter("user_id < 20")
-    src = str(tmp_path / "src")
-    # two separate files → two micro-batches with maxFilesPerTrigger=1
-    events.filter("event_id % 2 = 0").coalesce(1).write.parquet(f"{src}/b0")
-    events.filter("event_id % 2 = 1").coalesce(1).write.parquet(f"{src}/b1")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        running_user_profile(stream)
-        .writeStream.format("memory")
-        .queryName("profiles")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    emitted = spark.table("profiles")
-    assert emitted.count() > 0
-    # last emission per user == ground-truth batch aggregate
-    final = {
-        r.user_id: (r.total_events, r.total_purchases)
-        for r in emitted.groupBy("user_id")
-        .agg(
-            F.max("total_events").alias("total_events"),
-            F.max("total_purchases").alias("total_purchases"),
-        )
-        .collect()
-    }
-    truth = {
-        r.user_id: (r.n, r.p)
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.count(F.when(F.col("event_type") == "purchase", 1)).alias("p"),
-        )
-        .collect()
-    }
-    assert final == truth
 
 
 def test_sessionization_stitches_across_batches(spark, tmp_path):
@@ -116,68 +68,6 @@ def test_sessionization_stitches_across_batches(spark, tmp_path):
     assert got == expected and len(got) > 0
 
 
-def test_sessionization_timeout_flushes_idle_sessions(spark, tmp_path):
-    """EventTimeTimeout: sessions idle past the gap horizon when the
-    watermark advances must be flushed. Every emitted session must exactly
-    match a batch ground-truth session, and the timeout variant must emit
-    strictly more than the no-timeout variant."""
-    from mallarddv_spark.streaming.stateful import sessionize_stream_flushing
-
-    events = read_events(spark, SF).filter("user_id < 15").select("user_id", "ts")
-    cut = "2024-01-16 00:00:00"
-    src = str(tmp_path / "flush_src")
-    events.filter(f"ts < timestamp'{cut}'").coalesce(1).write.parquet(f"{src}/b0")
-    events.filter(f"ts >= timestamp'{cut}'").coalesce(1).write.parquet(f"{src}/b1")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        sessionize_stream_flushing(stream, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("flushed_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "flush_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.table("flushed_sessions").collect()
-    }
-
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy("ts")
-    flagged = events.withColumn("prev", F.lag("ts").over(w)).withColumn(
-        "new_s",
-        F.when(
-            F.col("prev").isNull()
-            # NTZ-safe gap (cast-to-double rejects TIMESTAMP_NTZ)
-            | (F.expr("timestampdiff(MICROSECOND, prev, ts)") > 1800 * 1_000_000),
-            1,
-        ).otherwise(0),
-    ).withColumn("sid", F.sum("new_s").over(w))
-    truth = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in flagged.groupBy("user_id", "sid")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count("*").alias("n_events"),
-        )
-        .collect()
-    }
-    assert got <= truth  # nothing fabricated
-    # closed-by-gap sessions (all but last per user) must all be present,
-    # plus at least one timeout-flushed final session
-    n_users = events.select("user_id").distinct().count()
-    n_closed_by_gap = len(truth) - n_users
-    assert len(got) > n_closed_by_gap, (len(got), n_closed_by_gap)
-
-
 class _FakeGroupState:
     """Minimal stand-in for GroupState to unit-test session algebra."""
 
@@ -195,31 +85,20 @@ class _FakeGroupState:
     def update(self, v):
         self._v = v
 
-    @property
-    def hasTimedOut(self):
-        return False
-
-    def setTimeoutTimestamp(self, ts):
-        self.timeout_ts = ts
-
 
 def test_sessionize_out_of_order_stitch_widens_interval():
     """An event older than the open session's start (cross-batch, NoTimeout
     variant has no watermark) must widen the interval, never move its end
     backwards (ADVICE r1)."""
     import pandas as pd
-    from mallarddv_spark.streaming.stateful import (
-        _sessionize,
-        _sessionize_with_timeout,
-    )
+    from mallarddv_spark.streaming.stateful import _sessionize
 
     start_us, end_us = 1_000 * 1_000_000, 2_000 * 1_000_000
     late_s = 500  # predates the open session's start, within the 30-min gap
-    for fn in (_sessionize, _sessionize_with_timeout):
-        state = _FakeGroupState((start_us, end_us, 3))
-        batch = pd.DataFrame({"ts": [pd.Timestamp(late_s, unit="s")]})
-        list(fn((7,), iter([batch]), state))
-        new_start, new_end, n = state.get
-        assert new_start == late_s * 1_000_000  # widened backwards
-        assert new_end == end_us  # NOT moved backwards
-        assert n == 4
+    state = _FakeGroupState((start_us, end_us, 3))
+    batch = pd.DataFrame({"ts": [pd.Timestamp(late_s, unit="s")]})
+    list(_sessionize((7,), iter([batch]), state))
+    new_start, new_end, n = state.get
+    assert new_start == late_s * 1_000_000  # widened backwards
+    assert new_end == end_us  # NOT moved backwards
+    assert n == 4

@@ -16,23 +16,6 @@ FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 SF = "/root/testdata/sf0.001"
 
 
-def test_windowed_agg_stream_matches_batch(spark, tmp_path):
-    events = read_events(spark, SF)
-    # write micro-precision events parquet for the file stream source
-    src = str(tmp_path / "events_src")
-    ckpt = str(tmp_path / "ckpt")
-    events.write.parquet(src)
-
-    q = ingest.stream_events_to_console_demo(spark, src, ckpt, events.schema)
-    q.awaitTermination(120)
-
-    streamed = spark.table("windowed_events")
-    batch = ingest.windowed_event_aggregate(events)
-    s_rows = sorted(map(tuple, streamed.collect()))
-    b_rows = sorted(map(tuple, batch.collect()))
-    assert s_rows == b_rows and len(s_rows) > 0
-
-
 def test_streaming_dv_ingestion(spark, tmp_path):
     """File stream → foreachBatch running the vault flow: the anti-join
     load protocol absorbs micro-batch replays idempotently."""
@@ -67,36 +50,6 @@ def test_streaming_dv_ingestion(spark, tmp_path):
 
     assert spark.table("dv.hub_customer").count() == 3  # 2 keys + NULL ghost
     assert spark.table("dv.hsat_customer_details").count() == 2
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """Rows replayed in a later micro-batch within the watermark are
-    dropped; the deduped stream equals the batch-distinct ground truth."""
-    events = read_events(spark, SF).filter("user_id < 10")
-    src = str(tmp_path / "dupsrc")
-    # batch 0: all events; batch 1: a replay of half of them (duplicates)
-    events.coalesce(1).write.parquet(f"{src}/b0")
-    events.filter("event_id % 2 = 0").coalesce(1).write.parquet(f"{src}/b1")
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    deduped = ingest.dedup_stream(stream, ["event_id"], ts_col="ts", watermark="10 days")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("deduped_events")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.table("deduped_events")
-    assert got.count() == events.count()  # replays dropped
-    assert got.select("event_id").distinct().count() == events.count()
 
 
 def test_stream_stream_join_matches_batch(spark, tmp_path):
@@ -143,52 +96,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_vault_stream_processor_with_quarantine(spark, tmp_path):
-    """The packaged stream processor runs the full flow per micro-batch,
-    quarantining contract-violating rows instead of failing the query."""
-    from mallarddv_spark.operators import expectations as E
-    from mallarddv_spark.plans.model import fetch_table_columns
-    from mallarddv_spark.sources.readers import staging_schema
-
-    drop_vault(spark)
-    spark.sql("DROP TABLE IF EXISTS default.stream_dead")
-    vault = MallardSparkVault(spark)
-    assert vault.init_vault(
-        os.path.join(FIXTURES, "tables.csv"),
-        os.path.join(FIXTURES, "transitions.csv"),
-    ) == []
-
-    src = str(tmp_path / "landing")
-    os.makedirs(src)
-    # fixture file + a second drop containing one contract-violating row
-    shutil.copy(os.path.join(FIXTURES, "customer.csv"), src)
-    with open(os.path.join(src, "batch2.csv"), "w") as fh:
-        fh.write("id,first_name,last_name,email,created_date,"
-                 "referenced_by,reference_code\n")
-        fh.write("9,new,cust,n@x.io,2025-06-01 00:00:00,,\n")
-        fh.write(",bad,row,b@x.io,2025-06-01 00:00:00,,\n")
-
-    cols = fetch_table_columns(spark, "metadata", base_name="customer",
-                               rel_type="stg")
-    process = ingest.vault_stream_processor(
-        vault, "customer", "stream",
-        expectations=[E.expect_not_null("id")],
-        quarantine_table="default.stream_dead",
-        load_date_overwrite="2025-06-01 00:00:00",
-    )
-    q = ingest.stream_files_to_staging(
-        spark, src, staging_schema(cols, "customer"),
-        str(tmp_path / "ckpt"), process, file_format="csv",
-    )
-    q.awaitTermination(120)
-
-    hub_bks = {r.id_bk for r in spark.table("dv.hub_customer").collect()}
-    assert 9 in hub_bks  # clean row from the violating batch loaded
-    dead = spark.table("default.stream_dead").collect()
-    assert len(dead) == 1 and dead[0].violated_rules == "not_null(id)"
-    spark.sql("DROP TABLE IF EXISTS default.stream_dead")
-
-
 def test_neardup_stream_heals_torn_index(spark, tmp_path):
     """A compaction crash between rename-out and rename-in leaves the
     index's sigs dir absent with only the __pre_compact backup. The
@@ -224,6 +131,68 @@ def test_neardup_stream_heals_torn_index(spark, tmp_path):
     # the backup was restored and the batch appended on top of it
     assert spark.read.parquet(f"{index_path}/sigs").count() > 100
     spark.sql("DROP TABLE IF EXISTS default.heal_sink")
+
+
+def test_neardup_stream_replays_batch_torn_between_index_appends(
+    spark, tmp_path, monkeypatch
+):
+    """A kill between the MinHash index's two appends must not fence the
+    batch out of its replay. The stream's replay fence reads ``sigs``, so
+    ``sigs`` is written last: with the ``bands`` write failing, the replay
+    re-admits the batch and every admitted document ends up probeable."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mallarddv_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    index_path = str(tmp_path / "mh_idx")
+    dedup.build_minhash_index(
+        docs.filter("doc_id < 100"), index_path,
+        num_perm=32, bands=8, shingle_size=3,
+    )
+    spark.sql("DROP TABLE IF EXISTS default.fence_sink")
+    batch = docs.filter("doc_id >= 400 AND doc_id < 410").localCheckpoint()
+    process = ingest.neardup_stream_processor(
+        index_path, "default.fence_sink", threshold=0.9
+    )
+
+    real_parquet = DataFrameWriter.parquet
+
+    def bands_write_dies(self, path, *a, **k):
+        if path.endswith("/bands"):
+            raise RuntimeError("killed before the bands append")
+        return real_parquet(self, path, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", bands_write_dies)
+        with pytest.raises(RuntimeError, match="bands append"):
+            process(batch, 0)
+
+    process(batch, 0)  # the replay after restart
+
+    def ids(sub):
+        return {
+            r.doc_id
+            for r in spark.read.parquet(f"{index_path}/{sub}")
+            .filter("doc_id >= 400").select("doc_id").distinct().collect()
+        }
+
+    admitted = {r.doc_id for r in spark.table("default.fence_sink").collect()}
+    assert admitted
+    assert ids("bands") == ids("sigs") == admitted
+    spark.sql("DROP TABLE IF EXISTS default.fence_sink")
+
+
+def test_refresh_after_batch_write_logs_missing_table(spark, caplog):
+    """A refresh that fails (the table is not in that session's catalog)
+    does not fail the batch, and is logged at debug level, not dropped."""
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="mallarddv_spark.streaming")
+    ingest._refresh_after_batch_write(spark, "default.no_such_refresh_tbl")
+    hits = [r for r in caplog.records
+            if "no_such_refresh_tbl" in r.getMessage()]
+    assert hits and hits[0].levelno == logging.DEBUG and hits[0].exc_info
 
 
 def test_neardup_stream_contamination_gate(spark, tmp_path):
@@ -281,61 +250,6 @@ def test_neardup_stream_contamination_gate(spark, tmp_path):
     assert 420 not in idx_ids and sink_ids <= idx_ids
     spark.sql("DROP TABLE IF EXISTS default.gate_sink")
     spark.sql("DROP TABLE IF EXISTS default.gate_dirty")
-
-
-def test_vault_stream_staging_not_stale(spark, tmp_path):
-    """Regression: foreachBatch overwrites staging through a CLONED
-    session, so without an explicit refresh the vault session's relation
-    cache keeps the previous batch's (deleted) staging file listing and
-    execute_flow loads stale or missing data. Pre-caching the staging
-    relation in the vault session before each stream reproduces the
-    hazard; every batch's keys must still land."""
-    from mallarddv_spark.plans.model import fetch_table_columns
-    from mallarddv_spark.sources.readers import staging_schema
-
-    drop_vault(spark)
-    vault = MallardSparkVault(spark)
-    assert vault.init_vault(
-        os.path.join(FIXTURES, "tables.csv"),
-        os.path.join(FIXTURES, "transitions.csv"),
-    ) == []
-
-    src = str(tmp_path / "landing")
-    os.makedirs(src)
-    shutil.copy(os.path.join(FIXTURES, "customer.csv"), src)
-
-    cols = fetch_table_columns(spark, "metadata", base_name="customer",
-                               rel_type="stg")
-    schema = staging_schema(cols, "customer")
-    process = ingest.vault_stream_processor(
-        vault, "customer", "stream",
-        load_date_overwrite="2025-06-01 00:00:00",
-    )
-    ck = str(tmp_path / "ckpt")
-
-    # poison: resolve staging in the vault session so its relation cache
-    # holds the pre-stream (empty) file listing
-    spark.table("stg.customer").count()
-    q = ingest.stream_files_to_staging(
-        spark, src, schema, ck, process, file_format="csv"
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None, q.exception()
-    assert {r.id_bk for r in spark.table("dv.hub_customer").collect()} >= {1, 2}
-
-    # re-poison with batch 1's listing, then stream a second file through
-    # the SAME checkpoint (guaranteed separate micro-batch)
-    spark.table("stg.customer").count()
-    with open(os.path.join(src, "batch2.csv"), "w") as fh:
-        fh.write("id,first_name,last_name,email,created_date,"
-                 "referenced_by,reference_code\n")
-        fh.write("7,late,arrival,l@x.io,2025-06-02 00:00:00,,\n")
-    q = ingest.stream_files_to_staging(
-        spark, src, schema, ck, process, file_format="csv"
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None, q.exception()
-    assert 7 in {r.id_bk for r in spark.table("dv.hub_customer").collect()}
 
 
 def test_neardup_stream_processor(spark, tmp_path):
